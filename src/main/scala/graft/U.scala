@@ -85,8 +85,8 @@ object U {
     * broadcast hard limit and any sane driver/executor memory budget —
     * while the frames this guards (per-user anchors, SF-scaling TPC-H
     * dims, tombstone sets) reach 10⁸–10⁹ rows at the 100 TB target.
-    * Shared by [[sizeGate]], [[graft.operators.TimeSeries.anchorGate]]
-    * and the graph kernels' PrBroadcastNodeCap (same value by design).
+    * Shared by [[sizeGate]] (the funnel-family anchors included) and the
+    * graph kernels' PrBroadcastNodeCap (same value by design).
     * Every broadcast site in the library is inventoried in SCALE.md's
     * "broadcast audit" table; BroadcastAuditSpec fails when a new site
     * appears without a table row. */

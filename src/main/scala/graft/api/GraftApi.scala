@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.operators.{Components, Graphs, TimeSeries}
+import graft.operators.{Aggregations, Components, Graphs, Joins, TimeSeries}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,68 +9,41 @@ import org.apache.spark.sql.types.LongType
 /** The engine's reusable kernels as a PUBLIC, fixture-independent API.
   *
   * The declared queries in `graft.operators` / `graft.llm` demonstrate every
-  * operator against the test-data schema; the methods here are the same
-  * kernels lifted to caller-supplied frames and column names, so a user can
-  * run them on their own tables without touching the query registry. Each
-  * method keeps the scale shape its query twin is plan-guarded for (one
-  * union+window pass for as-of, bounded posting-list joins for near-dup,
-  * gated broadcast↔shuffle iteration for graphs — see SCALE.md).
+  * operator against the test-data schema; the methods here expose the same
+  * kernels on caller-supplied frames and column names, so a user can run
+  * them on their own tables without touching the query registry. Each
+  * facade method delegates to its operator kernel — the one body the
+  * declared query also calls (e.g. [[asOfJoin]] → [[Joins.asOf]]) — so a
+  * method has exactly the scale shape its query twin is plan-guarded for
+  * (one union+window pass for as-of, bounded posting-list joins for
+  * near-dup, gated broadcast↔shuffle iteration for graphs — see SCALE.md).
   */
 object GraftApi {
 
   /** As-of join: enrich each `probe` row with the latest `build` row at
     * `buildTs` <= `probeTs` (or the earliest at >= when `forward`), per
-    * join key. One union-tagged frame + ONE window pass — no join operator,
-    * no per-key range scan; build rows order before probes at equal ts, so
-    * ties resolve to "at-or-before" exactly like DuckDB's ASOF JOIN.
-    * `buildVals` columns come back as `asof_<name>` (null when no match). */
+    * join key — one union-tagged frame + ONE window pass, no join operator
+    * (DuckDB ASOF JOIN semantics). `buildVals` columns come back as
+    * `asof_<name>` (null when no match), all from the same matched build
+    * row. Build rows tying on (key, ts) pick in an unspecified order —
+    * pass `tiebreak` (a column on both frames) for determinism; the
+    * declared `join_asof` queries tie-break on event_id. Kernel:
+    * [[Joins.asOf]]. */
   def asOfJoin(probe: DataFrame, build: DataFrame, keys: Seq[String],
       probeTs: String, buildTs: String, buildVals: Seq[String],
-      forward: Boolean = false): DataFrame = {
-    require(keys.nonEmpty && buildVals.nonEmpty)
-    val probeCols = probe.columns.toSeq
-    // ONE row-marker struct carries every build value together: last(...,
-    // ignoreNulls) skips only probe rows (whose marker is a NULL struct),
-    // never a matched build row whose VALUE column is NULL — so a NULL
-    // build value comes back as the matched row's NULL (DuckDB ASOF
-    // semantics), and all asof_* columns come from the SAME build row
-    val mType = org.apache.spark.sql.types.StructType(
-      buildVals.map(c => build.schema(c)))
-    val bSide = build.select(
-      keys.map(col) ++ Seq(col(buildTs).as("__ts"), lit(0).as("__side")) ++
-        probeCols.filterNot(keys.contains).map(c =>
-          lit(null).cast(probe.schema(c).dataType).as(c)) ++
-        Seq(struct(buildVals.map(col): _*).as("__m")): _*)
-    val pSide = probe.select(
-      keys.map(col) ++ Seq(col(probeTs).as("__ts"), lit(1).as("__side")) ++
-        probeCols.filterNot(keys.contains).map(col) ++
-        Seq(lit(null).cast(mType).as("__m")): _*)
-    val ord = if (forward) col("__ts").desc else col("__ts").asc
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(ord, col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = bSide.unionByName(pSide)
-      .withColumn("__m", last(col("__m"), ignoreNulls = true).over(w))
-    buildVals.foldLeft(carried) { (df, c) =>
-        df.withColumn(s"asof_$c", col(s"__m.$c"))
-      }
-      .filter(col("__side") === 1).drop("__ts", "__side", "__m")
-  }
+      forward: Boolean = false, tiebreak: Option[String] = None): DataFrame =
+    Joins.asOf(probe, build, keys, probeTs, buildTs, buildVals, forward,
+      tiebreak)
 
   /** Gap-based sessionization: appends a `session_id` column numbering each
     * key's sessions (1-based) with a new session whenever the gap to the
-    * previous row exceeds `gapSeconds`. One shuffle+sort per key. */
+    * previous row exceeds `gapSeconds`. One shuffle+sort per key; rows
+    * tying on (key, ts) share a session, and `tiebreak` fixes their row
+    * order like the declared `ts_sessionize` (event_id). Kernel:
+    * [[TimeSeries.sessionize]]. */
   def sessionize(df: DataFrame, key: String, ts: String,
-      gapSeconds: Long): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ts))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__prev_us", lag(unix_micros(col(ts)), 1).over(w))
-      .withColumn("session_id", sum(
-        when(col("__prev_us").isNull ||
-          unix_micros(col(ts)) - col("__prev_us") > gapSeconds * 1000000L, 1L)
-          .otherwise(0L)).over(run))
-      .drop("__prev_us")
-  }
+      gapSeconds: Long, tiebreak: Option[String] = None): DataFrame =
+    TimeSeries.sessionize(df, key, ts, gapSeconds, tiebreak)
 
   /** Grouped top-k through the custom whole-operator plan (bounded per-group
     * heaps — no global sort, no full window materialization). */
@@ -161,274 +134,95 @@ object GraftApi {
 
   /** Multi-step windowed conversion funnel over (key, ts, type): the
     * deepest PREFIX of `steps` completed in strict order inside
-    * `windowSeconds` of the first step's earliest occurrence per key —
-    * the windowFunnel shape, earliest-completion semantics. Each step is
-    * one filtered hash-agg joined to the anchor frame of the previous
-    * step; a key that misses step i can never match step i+1 (its anchor
-    * is null), so `funnel_level` counts a true prefix. Returns every key
-    * with funnel_level (0..steps.length) and each step's completion time
-    * t1..tN. The anchor frames are |keys|-cardinality, so they dispatch
-    * through [[graft.U.sizeGate]]: broadcast below `broadcastCap` rows,
-    * shuffle-hash equi-join above it. The verdict is measured once on the
-    * first stage's anchors (one count on a persisted frame, released with
-    * `graft.U.releaseTracked()`); every later stage's key set is a subset,
-    * so the verdict covers the whole chain. */
+    * `windowSeconds` of the first step's earliest occurrence per key.
+    * Returns every key with each step's completion time t1..tN and
+    * funnel_level (0..steps.length). The |keys|-row anchor frames
+    * dispatch through [[graft.U.sizeGate]] (broadcast below
+    * `broadcastCap` rows, shuffle-hash above; release the cached anchor
+    * frames with `graft.U.releaseTracked()`). Kernel:
+    * [[TimeSeries.windowFunnel]]. */
   def windowFunnel(df: DataFrame, key: String, ts: String, typeCol: String,
       steps: Seq[String], windowSeconds: Long,
-      broadcastCap: Long = graft.U.BroadcastRowCap): DataFrame = {
-    require(steps.nonEmpty)
-    val (a0, wrap) = graft.U.sizeGate(
-      df.filter(col(typeCol) === steps.head)
-        .groupBy(col(key).as("__k")).agg(min(col(ts)).as("t1"))
-        .withColumn("__prev", col("t1")), broadcastCap)
-    var anchors = a0
-    for ((st, idx) <- steps.tail.zipWithIndex) {
-      val cn = s"t${idx + 2}"
-      val next = df.join(wrap(anchors), col(key) === col("__k"))
-        .filter(col(typeCol) === st && col(ts) > col("__prev") &&
-          unix_micros(col(ts)) <=
-            unix_micros(col("t1")) + windowSeconds * 1000000L)
-        .groupBy(col("__k").as("__k2")).agg(min(col(ts)).as(cn))
-      anchors = anchors.join(next, col("__k") === col("__k2"), "left_outer")
-        .drop("__k2").withColumn("__prev", col(cn))
-    }
-    val level = (1 to steps.length)
-      .map(i => when(col(s"t$i").isNotNull, 1L).otherwise(0L))
-      .reduce(_ + _)
-    df.select(col(key)).distinct()
-      .join(wrap(anchors.drop("__prev")), col(key) === col("__k"),
-        "left_outer")
-      .drop("__k")
-      .withColumn("funnel_level", level)
-  }
+      broadcastCap: Long = graft.U.BroadcastRowCap): DataFrame =
+    TimeSeries.windowFunnel(df, key, ts, typeCol, steps, windowSeconds,
+      broadcastCap)
 
   /** Two-threshold hysteresis alarm over (key, ts, value): ON above `hi`,
-    * OFF only below `lo`, latched via last-IGNORE-NULLS over each key's
-    * ordered stream (oscillation between the thresholds cannot flap it).
-    * Appends `alarm` (0/1) and `is_onset` columns; one window pass.
-    * Rows tying on (key, ts) latch in an unspecified order — pass
-    * `tiebreak` (appended to the window ordering) or supply unique
-    * timestamps for determinism; the declared `ts_hysteresis` query
-    * tie-breaks on event_id this way. */
+    * OFF only below `lo`, latched over each key's ordered stream
+    * (oscillation between the thresholds cannot flap it). Appends `alarm`
+    * (0/1) and `is_onset` columns; one window pass. Rows tying on
+    * (key, ts) latch in an unspecified order — pass `tiebreak` (appended
+    * to the window ordering) or supply unique timestamps for determinism;
+    * the declared `ts_hysteresis` query tie-breaks on event_id this way.
+    * Kernel: [[TimeSeries.hysteresisAlarm]] (thresholds as columns). */
   def hysteresisAlarm(df: DataFrame, key: String, ts: String, value: String,
       hi: Double, lo: Double, tiebreak: Option[String] = None): DataFrame = {
     require(lo <= hi)
-    val ordCols = col(ts) +: tiebreak.map(col).toSeq
-    val w = Window.partitionBy(col(key)).orderBy(ordCols: _*)
-    val edge = when(col(value) > hi, 1L).when(col(value) < lo, 0L)
-    df.withColumn("alarm", coalesce(
-        last(edge, ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-        lit(0L)))
-      .withColumn("is_onset", col("alarm") === 1L &&
-        coalesce(lag(col("alarm"), 1).over(w), lit(0L)) === 0L)
+    TimeSeries.hysteresisAlarm(df, Seq(key), ts, col(value), lit(hi), lit(lo),
+      tiebreak)
   }
 
   /** Tabular (decision-interval) CUSUM alarm over (key, ts, value): flags
     * rows where the one-sided cumulative drift S⁺/S⁻ exceeds `h`, with
-    * slack `k`, against each key's own mean — the small-sustained-shift
-    * detector a per-point σ-band misses. The recursion S⁺ᵢ = max(0,
-    * S⁺ᵢ₋₁ + x − μ − k) runs as its closed form cumᵢ − min(0, min_{j≤i}
-    * cumⱼ) over two running windows; μ never divides (everything is
-    * n-scaled in Decimal(38,0)), so the verdicts are exact at any scale.
-    * `k`/`h` are in the value's own units as decimal literals that
-    * promote exactly (e.g. 5.0, 50.0). Appends `cusum_high` /
+    * slack `k`, against each key's own mean — exact n-scaled Decimal(38,0)
+    * verdicts. `k`/`h` are in the value's own units as decimal literals
+    * that promote exactly (e.g. 5.0, 50.0). Appends `cusum_high` /
     * `cusum_low` boolean columns. Rows tying on (key, ts) fold in an
     * unspecified order — pass `tiebreak` for determinism (the declared
-    * `ts_cusum_alarm` query tie-breaks on event_id). */
+    * `ts_cusum_alarm` query tie-breaks on event_id). Kernel:
+    * [[TimeSeries.cusumAlarm]]. */
   def cusumAlarm(df: DataFrame, key: String, ts: String, value: String,
       k: Double = 5.0, h: Double = 50.0,
-      tiebreak: Option[String] = None): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val ordCols = col(ts) +: tiebreak.map(col).toSeq
-    val w = Window.partitionBy(col(key)).orderBy(ordCols: _*)
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.partitionBy(col(key))
-    val kc = (lit(k).cast("decimal(12,2)") * 100).cast(LongType)
-    val hc = (lit(h).cast("decimal(12,2)") * 100).cast(LongType)
-    val hiN = col("__n").cast(dec) * hc
-    df.withColumn("__vc", (col(value).cast("decimal(12,2)") * 100)
-        .cast(LongType))
-      .withColumn("__n", count(lit(1)).over(full))
-      .withColumn("__sx", sum(col("__vc")).over(full))
-      .withColumn("__dp",
-        col("__n").cast(dec) * (col("__vc") - kc) - col("__sx"))
-      .withColumn("__dm",
-        col("__sx").cast(dec) - col("__n").cast(dec) * (col("__vc") + kc))
-      .withColumn("__cp", sum(col("__dp")).over(run))
-      .withColumn("__cm", sum(col("__dm")).over(run))
-      .withColumn("cusum_high", col("__cp") -
-        least(lit(0L).cast(dec), min(col("__cp")).over(run)) > hiN)
-      .withColumn("cusum_low", col("__cm") -
-        least(lit(0L).cast(dec), min(col("__cm")).over(run)) > hiN)
-      .drop("__vc", "__n", "__sx", "__dp", "__dm", "__cp", "__cm")
-  }
+      tiebreak: Option[String] = None): DataFrame =
+    TimeSeries.cusumAlarm(df, key, ts, value, k, h, tiebreak)
 
   /** Hampel filter over (key, ts, value): flags readings more than
-    * `nMads` scaled MADs from the trailing-`window` rolling median — the
-    * robust spike detector a single outlier cannot drag (a z-score's
-    * mean and σ it WOULD inflate). `window` must be odd so both order
-    * statistics are exact single picks; the verdict is the integer
-    * cross-multiplication |x−med|·10⁴ > round(nMads·1.4826·10⁴)·mad.
-    * Emitted only once the frame is full. Appends `med`, `mad` (cents)
-    * and `is_outlier`. Rows tying on (key, ts) make the rolling window
-    * contents nondeterministic — pass `tiebreak` (a unique column, e.g.
-    * an event id) to pin the order, exactly as [[cusumAlarm]] does; with
-    * no tiebreak the tie order is unspecified. */
+    * `nMads` scaled MADs from the trailing-`window` rolling median
+    * (`window` odd, emitted once the frame is full). Appends `med`, `mad`
+    * (cents) and `is_outlier`. Rows tying on (key, ts) make the rolling
+    * window contents nondeterministic — pass `tiebreak` (a unique column,
+    * e.g. an event id) to pin the order. Kernel:
+    * [[TimeSeries.hampelFilter]]. */
   def hampelFilter(df: DataFrame, key: String, ts: String, value: String,
       window: Int = 7, nMads: Double = 3.0,
-      tiebreak: Option[String] = None): DataFrame = {
-    require(window >= 3 && window % 2 == 1, s"window must be odd >= 3")
-    val ordCols = col(ts) +: tiebreak.map(col).toSeq
-    val w = Window.partitionBy(col(key)).orderBy(ordCols: _*)
-    val f = w.rowsBetween(-(window - 1), Window.currentRow)
-    val mid = (window + 1) / 2
-    val scale = math.round(nMads * 1.4826 * 10000).toInt
-    df.withColumn("__vc", (col(value).cast("decimal(12,2)") * 100)
-        .cast(LongType))
-      .withColumn("__rn", row_number().over(w).cast(LongType))
-      .withColumn("__win", sort_array(collect_list(col("__vc")).over(f)))
-      .filter(col("__rn") >= window)
-      .withColumn("med", element_at(col("__win"), mid))
-      .withColumn("mad", element_at(
-        sort_array(transform(col("__win"), x => abs(x - col("med")))), mid))
-      .withColumn("is_outlier",
-        abs(col("__vc") - col("med")) * 10000L > lit(scale.toLong) * col("mad"))
-      .drop("__vc", "__rn", "__win")
-  }
+      tiebreak: Option[String] = None): DataFrame =
+    TimeSeries.hampelFilter(df, key, ts, value, window, nMads, tiebreak)
 
   /** Burst detection over (typeCol, ts): maximal runs of >= `minRun`
     * consecutive buckets each at least num/den × the type's mean bucket
-    * rate — the `ts_burst` kernel on caller columns. The threshold compare
-    * is the exact integer cross-multiplication den·n_b·buckets >= num·total
-    * (no division), runs come from gaps-islands on the bucket index.
-    * Everything after the first aggregation is bucket-cardinality. */
+    * rate (exact integer threshold). Returns (typeCol, burst_start,
+    * burst_end — exclusive end of the last bucket — n_buckets, n_events).
+    * Kernel: [[TimeSeries.burstRuns]]. */
   def burstRuns(df: DataFrame, typeCol: String, ts: String,
       bucketSeconds: Long = 3600L, num: Long = 4L, den: Long = 3L,
-      minRun: Int = 3): DataFrame = {
-    require(bucketSeconds > 0 && num > 0 && den > 0 && minRun >= 1)
-    val usPerBucket = bucketSeconds * 1000000L
-    val hourly = df
-      .withColumn("__bidx", expr(s"unix_micros($ts) DIV $usPerBucket"))
-      .groupBy(col(typeCol), col("__bidx"))
-      .agg(count(lit(1)).as("__nb"))
-    val tot = hourly.groupBy(col(typeCol).as("__t"))
-      .agg(sum(col("__nb")).as("__s"), count(lit(1)).as("__c"))
-    val wr = Window.partitionBy(col(typeCol)).orderBy(col("__bidx"))
-    hourly.join(tot, col(typeCol) === col("__t"))
-      .filter(lit(den) * col("__nb") * col("__c") >= lit(num) * col("__s"))
-      .withColumn("__grp", col("__bidx") - row_number().over(wr))
-      .groupBy(col(typeCol), col("__grp"))
-      .agg(timestamp_micros(min(col("__bidx")) * usPerBucket)
-          .as("burst_start"),
-        timestamp_micros((max(col("__bidx")) + 1) * usPerBucket)
-          .as("burst_end"),
-        count(lit(1)).as("n_buckets"), sum(col("__nb")).as("n_events"))
-      .filter(col("n_buckets") >= minRun)
-      .drop("__grp")
-  }
+      minRun: Int = 3): DataFrame =
+    TimeSeries.burstRuns(df, typeCol, ts, bucketSeconds, num, den, minRun)
 
   /** Peak concurrency per day over gap-sessionized (key, ts) activity —
-    * the `ts_max_concurrency` sweep line on caller columns. Sessions close
-    * after `gapSeconds` idle; each contributes ±1 at its endpoints (starts
-    * order before ends at equal instants, inclusive intervals). No global
-    * sort: endpoints block by day, day baselines prefix over the |days|
-    * frame, and GREATEST with the day-entry level counts
-    * midnight-spanning sessions. */
+    * a day-blocked sweep line, no global sort. Sessions close after
+    * `gapSeconds` idle. Returns (day, max_concurrent). Kernel:
+    * [[TimeSeries.maxConcurrency]]. */
   def maxConcurrency(df: DataFrame, key: String, ts: String,
-      gapSeconds: Long = 1800L): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ts))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = df
-      .withColumn("__prev", lag(unix_micros(col(ts)), 1).over(w))
-      .withColumn("__new", when(col("__prev").isNull ||
-        unix_micros(col(ts)) - col("__prev") > gapSeconds * 1000000L, 1L)
-        .otherwise(0L))
-      .withColumn("__sid", sum(col("__new")).over(run))
-      .groupBy(col(key), col("__sid"))
-      .agg(min(col(ts)).as("__st"), max(col(ts)).as("__en"))
-    val pts = sess.select(col("__st").as("__t"), lit(1L).as("__d"))
-      .unionByName(sess.select(col("__en").as("__t"), lit(-1L).as("__d")))
-      .withColumn("__day", date_trunc("DAY", col("__t")))
-    val offs = pts.groupBy(col("__day").as("__od"))
-      .agg(sum(col("__d")).as("__ds"))
-      .withColumn("__off", coalesce(
-        sum(col("__ds")).over(Window.orderBy(col("__od"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__od"), col("__off"))
-    val wd = Window.partitionBy(col("__day"))
-      .orderBy(col("__t"), col("__d").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pts.withColumn("__rs", sum(col("__d")).over(wd))
-      .groupBy(col("__day")).agg(max(col("__rs")).as("__peak"))
-      .join(offs, col("__day") === col("__od"))
-      .select(col("__day").as("day"),
-        greatest(col("__off") + col("__peak"), col("__off"))
-          .as("max_concurrent"))
-  }
+      gapSeconds: Long = 1800L): DataFrame =
+    TimeSeries.maxConcurrency(df, key, ts, gapSeconds)
 
   /** Rolling OLS trend over (key, ts, value): slope and intercept of
     * value-vs-row-index over the trailing `window` points per key, emitted
-    * once the frame is full — the `ts_rolling_ols` kernel on caller
-    * columns. Four exact Long power sums over ONE ROWS frame; doubles only
-    * in the closing divisions. Rows tying on (key, ts) index in an
-    * unspecified order — supply unique timestamps (or pre-disambiguate)
-    * for bit-determinism, like the declared query's event_id tiebreak. */
+    * once the frame is full; exact Long power sums, doubles only in the
+    * closing divisions. Rows tying on (key, ts) index in an unspecified
+    * order — pass `tiebreak` for bit-determinism, like the declared
+    * query's event_id tiebreak. Kernel: [[TimeSeries.rollingOls]]. */
   def rollingOls(df: DataFrame, key: String, ts: String, value: String,
-      window: Int = 10): DataFrame = {
-    require(window >= 2)
-    val w = Window.partitionBy(col(key)).orderBy(col(ts))
-    val f = w.rowsBetween(-(window - 1), Window.currentRow)
-    val n = window.toDouble
-    df.withColumn("__vc",
-        (col(value).cast("decimal(12,2)") * 100).cast(LongType))
-      .withColumn("__rn", row_number().over(w).cast(LongType))
-      .withColumn("__sx", sum(col("__rn")).over(f))
-      .withColumn("__sy", sum(col("__vc")).over(f))
-      .withColumn("__sxy", sum(col("__rn") * col("__vc")).over(f))
-      .withColumn("__sxx", sum(col("__rn") * col("__rn")).over(f))
-      .filter(col("__rn") >= window)
-      .withColumn("slope",
-        (lit(n) * col("__sxy") - col("__sx").cast("double") * col("__sy")) /
-          (lit(100.0) * (lit(n) * col("__sxx") -
-            col("__sx").cast("double") * col("__sx"))))
-      .withColumn("intercept",
-        (col("__sy").cast("double") / lit(100.0) -
-          col("slope") * col("__sx")) / lit(n))
-      .drop("__vc", "__rn", "__sx", "__sy", "__sxy", "__sxx")
-  }
+      window: Int = 10, tiebreak: Option[String] = None): DataFrame =
+    TimeSeries.rollingOls(df, key, ts, value, window, tiebreak)
 
-  /** Spearman rank correlation between two numeric columns per group — the
-    * `agg_spearman` kernel on caller columns. Tie-averaged (midrank)
-    * semantics with ONE sort per column: 2·midrank = rank() + RANGE-frame
-    * peer count; power sums in Decimal(38,0), exact to ~1e9 rows/group.
-    * Returns (group, n, spearman). */
+  /** Spearman rank correlation between two numeric columns per group:
+    * tie-averaged (midrank) semantics with ONE sort per column, power sums
+    * in Decimal(38,0), exact to ~1e9 rows/group. Returns
+    * (group, n, spearman). Kernel: [[Aggregations.spearmanCorr]]. */
   def spearmanCorr(df: DataFrame, group: String, xCol: String,
-      yCol: String): DataFrame = {
-    val wx = Window.partitionBy(col(group)).orderBy(col(xCol))
-    val wy = Window.partitionBy(col(group)).orderBy(col(yCol))
-    val px = wx.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val py = wy.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.partitionBy(col(group))
-    // centered doubled ranks (mean is exactly n+1): sums bounded by n³ so
-    // the closing DOUBLE casts stay exact — see the declared agg_spearman
-    df.withColumn("__nn", count(lit(1)).over(full))
-      .withColumn("__dx",
-        rank().over(wx).cast(LongType) + count(lit(1)).over(px) -
-          (col("__nn") + 1L))
-      .withColumn("__dy",
-        rank().over(wy).cast(LongType) + count(lit(1)).over(py) -
-          (col("__nn") + 1L))
-      .groupBy(col(group))
-      .agg(count(lit(1)).as("n"),
-        sum((col("__dx") * col("__dy")).cast("decimal(38,0)")).as("__sxy"),
-        sum((col("__dx") * col("__dx")).cast("decimal(38,0)")).as("__sxx"),
-        sum((col("__dy") * col("__dy")).cast("decimal(38,0)")).as("__syy"))
-      .select(col(group), col("n"),
-        (expr("CAST(__sxy AS DOUBLE)") /
-          (sqrt(expr("CAST(__sxx AS DOUBLE)")) *
-            sqrt(expr("CAST(__syy AS DOUBLE)")))).as("spearman"))
-  }
+      yCol: String): DataFrame =
+    Aggregations.spearmanCorr(df, group, xCol, yCol)
 
   /** Binary (sign-bit) embedding search over an (id, Array[Float] emb)
     * frame — the `sim_hamming_topk` kernel on caller columns, generalized
@@ -467,40 +261,12 @@ object GraftApi {
       .select(col("q_id"), col("rank"), col("__id").as(id), col("hamming"))
   }
 
-  /** Robust location + scale per group: exact doubled-median and
-    * quadrupled-MAD of a <=2-decimal value column, emitted as the exact
-    * halvings (median, mad) — the `agg_mad` kernel on caller columns.
-    * Fully integer until the closing halvings; two window sorts + two
-    * hash-aggs; the per-group median frame broadcasts through
-    * [[graft.U.sizeGate]] (group cardinality is data-derived). Release
-    * the gate's cached frame with `graft.U.releaseTracked()`. */
-  def medianMad(df: DataFrame, group: String, value: String): DataFrame = {
-    def med2Of(src: DataFrame, vcol: String, out: String): DataFrame = {
-      val w = Window.partitionBy(col(group)).orderBy(col(vcol))
-      val full = w.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      src.withColumn("__rn", row_number().over(w).cast(LongType))
-        .withColumn("__n", count(lit(1)).over(full))
-        .groupBy(col(group))
-        .agg(max(col("__n")).as("n"),
-          sum(when(col("__rn") === expr("(__n + 1) DIV 2") ||
-              col("__rn") === expr("__n DIV 2 + 1"),
-            when(expr("__n % 2 = 1"), col(vcol) * 2).otherwise(col(vcol)))
-            .otherwise(lit(0L))).as(out))
-    }
-    val base = df.select(col(group),
-      (col(value).cast("decimal(12,2)") * 100).cast(LongType).as("__vc"))
-    val (med, wm) = graft.U.sizeGate(
-      med2Of(base, "__vc", "med2")
-        .select(col(group).as("__g"), col("med2")))
-    val devs = base.join(wm(med), col(group) === col("__g"))
-      .select(col(group), abs(col("__vc") * 2 - col("med2")).as("__dev"))
-    med2Of(devs, "__dev", "mad4")
-      .join(wm(med), col(group) === col("__g"))
-      .select(col(group), col("n"),
-        (col("med2").cast("double") / lit(200.0)).as("median"),
-        (col("mad4").cast("double") / lit(400.0)).as("mad"))
-  }
+  /** Robust location + scale per group: exact median and MAD of a
+    * <=2-decimal value column, fully integer until the closing halvings;
+    * one shuffle on the group, no broadcast. Returns
+    * (group, n, median, mad). Kernel: [[Aggregations.medianMad]]. */
+  def medianMad(df: DataFrame, group: String, value: String): DataFrame =
+    Aggregations.medianMad(df, group, value)
 
   /** Multimodal ingestion: scan a directory of media files into the
     * BinaryType + typed-metadata frame the `multimodal_*` kernels consume —
@@ -596,7 +362,7 @@ object GraftApi {
   def wassersteinDrift(df: DataFrame, group: String, value: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val counts = graft.U.track(df.select(col(group).as("__g"),
-        (col(value).cast("decimal(12,2)") * 100).cast(LongType).as("__vc"))
+        graft.U.cents(col(value)).as("__vc"))
       .groupBy(col("__g"), col("__vc")).agg(count(lit(1)).as("__c"))
       .persist())
     val wAll = Window.orderBy(col("__sv"))

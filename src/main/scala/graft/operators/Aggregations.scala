@@ -930,46 +930,53 @@ object Aggregations {
       .orderBy("c_mktsegment")
   }
 
-  /** Spearman rank correlation between value and event time per event type
-    * (the monotone-trend probe Pearson misses). Average ranks for ties come
-    * WITHOUT a second sort per column: 2·avg_rank = rank() + peer-inclusive
-    * count over the RANGE frame (rank = below+1, range-count = at-or-below;
-    * their sum is exactly twice the midrank), an integer both engines agree
-    * on. The doubled ranks are then CENTERED by their exact mean (Σ2r =
-    * n(n+1), so the mean is the integer n+1) before the power sums — the
-    * centered sums are bounded by n³, which keeps every DOUBLE cast exact
-    * (< 2⁵³) through sf-scale groups of ~200k rows; the uncentered
-    * n·Σxy−ΣxΣy formulation reached 6e17 at sf0.1 and survived only
-    * because both engines' past-2⁵³ casts happened to round alike
-    * (DuckDB's HUGEINT→DOUBLE double-rounds — the ts_acf_lags lesson).
-    * Two window sorts (one per ranked column) + one hash-agg. */
-  private def aggSpearman(s: SparkSession, d: String): DataFrame = {
+  /** Spearman rank correlation kernel between two numeric columns per
+    * group (the monotone-trend probe Pearson misses), tie-averaged
+    * (midrank) semantics. Average ranks for ties come WITHOUT a second sort
+    * per column: 2·avg_rank = rank() + peer-inclusive count over the RANGE
+    * frame (rank = below+1, range-count = at-or-below; their sum is
+    * exactly twice the midrank), an integer both engines agree on. The
+    * doubled ranks are then CENTERED by their exact mean (Σ2r = n(n+1), so
+    * the mean is the integer n+1) before the power sums — the centered
+    * sums are bounded by n³, which keeps every DOUBLE cast exact (< 2⁵³)
+    * through sf-scale groups of ~200k rows; the uncentered n·Σxy−ΣxΣy
+    * formulation reached 6e17 at sf0.1 and survived only because both
+    * engines' past-2⁵³ casts happened to round alike (DuckDB's
+    * HUGEINT→DOUBLE double-rounds — the ts_acf_lags lesson). Power sums in
+    * Decimal(38,0). Two window sorts (one per ranked column) + one
+    * hash-agg. Returns (group, n, spearman). */
+  def spearmanCorr(df: DataFrame, group: String, xCol: String,
+      yCol: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val wv = Window.partitionBy(col("event_type")).orderBy(col("value"))
-    val wt = Window.partitionBy(col("event_type")).orderBy(col("us"))
-    val pv = wv.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val pt = wt.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.partitionBy(col("event_type"))
-    U.events(s, d)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("nn", count(lit(1)).over(full))
-      .withColumn("dx",
-        rank().over(wv).cast(LongType) + count(lit(1)).over(pv) -
-          (col("nn") + 1L))
-      .withColumn("dy",
-        rank().over(wt).cast(LongType) + count(lit(1)).over(pt) -
-          (col("nn") + 1L))
-      .groupBy(col("event_type"))
+    val wx = Window.partitionBy(col(group)).orderBy(col(xCol))
+    val wy = Window.partitionBy(col(group)).orderBy(col(yCol))
+    val px = wx.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    val py = wy.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    val full = Window.partitionBy(col(group))
+    df.withColumn("__nn", count(lit(1)).over(full))
+      .withColumn("__dx",
+        rank().over(wx).cast(LongType) + count(lit(1)).over(px) -
+          (col("__nn") + 1L))
+      .withColumn("__dy",
+        rank().over(wy).cast(LongType) + count(lit(1)).over(py) -
+          (col("__nn") + 1L))
+      .groupBy(col(group))
       .agg(count(lit(1)).as("n"),
-        sum((col("dx") * col("dy")).cast(dec)).as("sxy"),
-        sum((col("dx") * col("dx")).cast(dec)).as("sxx"),
-        sum((col("dy") * col("dy")).cast(dec)).as("syy"))
-      .select(col("event_type"), col("n"),
-        (expr("CAST(sxy AS DOUBLE)") /
-          (sqrt(expr("CAST(sxx AS DOUBLE)")) *
-            sqrt(expr("CAST(syy AS DOUBLE)")))).as("spearman"))
-      .orderBy("event_type")
+        sum((col("__dx") * col("__dy")).cast(dec)).as("__sxy"),
+        sum((col("__dx") * col("__dx")).cast(dec)).as("__sxx"),
+        sum((col("__dy") * col("__dy")).cast(dec)).as("__syy"))
+      .select(col(group), col("n"),
+        (expr("CAST(__sxy AS DOUBLE)") /
+          (sqrt(expr("CAST(__sxx AS DOUBLE)")) *
+            sqrt(expr("CAST(__syy AS DOUBLE)")))).as("spearman"))
   }
+
+  /** Spearman rank correlation between value and event time per event
+    * type through [[spearmanCorr]]. */
+  private def aggSpearman(s: SparkSession, d: String): DataFrame =
+    spearmanCorr(U.events(s, d).withColumn("us", unix_micros(col("ts"))),
+        "event_type", "value", "us")
+      .orderBy("event_type")
 
   /** Empirical CDF per event type at nine fixed probe points — the
     * distribution fingerprint a drift monitor compares release-over-release.
@@ -1050,43 +1057,48 @@ object Aggregations {
       .orderBy("event_type")
   }
 
-  /** Median absolute deviation of value per event type — the robust SCALE
+  /** Robust location + scale kernel per group: exact median and median
+    * absolute deviation of a <=2-decimal value column — the robust SCALE
     * companion to [[aggTrimmedMean]]'s location. Fully integer: the median
-    * ships DOUBLED (two middle cents summed — integral under even counts,
-    * the ts_interarrival trick), deviations are |2·x − med2| (integers, no
-    * halving), and the MAD ships QUADRUPLED (doubled median of doubled
-    * deviations). The closing doubles are exact halvings
+    * is computed DOUBLED (two middle cents summed — integral under even
+    * counts, the ts_interarrival trick), deviations are |2·x − med2|
+    * (integers, no halving), and the MAD QUADRUPLED (doubled median of
+    * doubled deviations). The closing doubles are exact halvings
     * (med2/200, mad4/400), identical in both engines by construction.
-    * Two window sorts + two hash-aggs; the med2 frame is \|types\|-sized
-    * (broadcast — taxonomy-bounded). */
-  private def aggMad(s: SparkSession, d: String): DataFrame = {
-    def med2Of(df: DataFrame, vcol: String, out: String): DataFrame = {
-      val w = Window.partitionBy(col("event_type")).orderBy(col(vcol))
-      val full = w.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      df.withColumn("rn", row_number().over(w).cast(LongType))
-        .withColumn("n", count(lit(1)).over(full))
-        .groupBy(col("event_type"))
-        .agg(max(col("n")).as("n"),
-          sum(when(col("rn") === expr("(n + 1) DIV 2") ||
-              col("rn") === expr("n DIV 2 + 1"),
-            when(expr("n % 2 = 1"), col(vcol) * 2).otherwise(col(vcol)))
-            .otherwise(lit(0L))).as(out))
-    }
-    val base = U.events(s, d)
-      .select(col("event_type"), U.cents(col("value")).as("vc"))
-    val med = med2Of(base, "vc", "med2")
-      .select(col("event_type").as("et"), col("n").as("n_med"), col("med2"))
-    val devs = base.join(broadcast(med), col("event_type") === col("et"))
-      .select(col("event_type"),
-        abs(col("vc") * 2 - col("med2")).as("dev"))
-    med2Of(devs, "dev", "mad4")
-      .join(broadcast(med), col("event_type") === col("et"))
-      .select(col("event_type"), col("n"),
-        (col("med2").cast(DoubleType) / lit(200.0)).as("median"),
-        (col("mad4").cast(DoubleType) / lit(400.0)).as("mad"))
-      .orderBy("event_type")
+    * Every step is a window over ONE group partitioning — the group's
+    * med2 reaches its rows as a whole-partition window sum, never as a
+    * joined-back frame — so it costs one shuffle, two sorts and one
+    * hash-agg, with no broadcast at any group cardinality. Returns
+    * (group, n, median, mad). */
+  def medianMad(df: DataFrame, group: String, value: String): DataFrame = {
+    // doubled median of `v` from its row number `rn` in the group's order
+    def med2(v: Column, rn: String): Column =
+      sum(when(col(rn) === expr("(__n + 1) DIV 2") ||
+          col(rn) === expr("__n DIV 2 + 1"),
+        when(expr("__n % 2 = 1"), v * 2).otherwise(v)).otherwise(lit(0L)))
+    val byVc = Window.partitionBy(col(group)).orderBy(col("__vc"))
+    val whole = byVc.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    df.select(col(group), U.cents(col(value)).as("__vc"))
+      .withColumn("__rn", row_number().over(byVc).cast(LongType))
+      .withColumn("__n", count(lit(1)).over(whole))
+      .withColumn("__med2", med2(col("__vc"), "__rn").over(whole))
+      .withColumn("__dev", abs(col("__vc") * 2 - col("__med2")))
+      .withColumn("__rd", row_number()
+        .over(Window.partitionBy(col(group)).orderBy(col("__dev")))
+        .cast(LongType))
+      .groupBy(col(group))
+      .agg(max(col("__n")).as("n"), max(col("__med2")).as("__med2"),
+        med2(col("__dev"), "__rd").as("__mad4"))
+      .select(col(group), col("n"),
+        (col("__med2").cast(DoubleType) / lit(200.0)).as("median"),
+        (col("__mad4").cast(DoubleType) / lit(400.0)).as("mad"))
   }
+
+  /** Median absolute deviation of value per event type through
+    * [[medianMad]]. */
+  private def aggMad(s: SparkSession, d: String): DataFrame =
+    medianMad(U.events(s, d), "event_type", "value").orderBy("event_type")
 
   /** Cohen's d between the click and purchase value distributions — the
     * standardized effect-size companion to agg_ttest's significance.

@@ -94,65 +94,96 @@ object Joins {
       .agg(count(lit(1)).as("n"), U.dsum(col("l_quantity")).as("sum_qty"))
       .orderBy("o_orderpriority")
 
-  /** As-of join: each 'error' event enriched with the latest 'purchase' of
-    * the same user at ts <= error ts. Union-tag both sides, one sort per
-    * (user, ts), running last(ignoreNulls) carries the build row forward.
-    * Oracle: DuckDB's native ASOF LEFT JOIN. */
-  private def joinAsof(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    // build rows keep their event_id purely as a window tie-break: two
-    // build rows at an identical (user, ts) would otherwise make the
-    // running-last pick shuffle-order-dependent (the fixtures are
-    // (user_id, ts)-unique, but determinism shouldn't rely on it)
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    // build rows sort before probe rows at equal ts => "<=" as-of semantics
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("asof_ts", last(col("b_ts"), ignoreNulls = true).over(w))
-      .withColumn("asof_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"), col("asof_value"))
-      .orderBy("event_id")
+  /** As-of join kernel: enrich each `probe` row with the latest `build` row
+    * at `buildTs` <= `probeTs` (or the earliest at >= when `forward`), per
+    * join key. One union-tagged frame + ONE window pass — no join operator,
+    * no per-key range scan; build rows order before probes at equal ts, so
+    * ties resolve to "at-or-before" exactly like DuckDB's ASOF JOIN.
+    * `tiebreak` names a column on BOTH frames that orders build rows tying
+    * on (key, ts); without it their pick is unspecified. `buildVals`
+    * columns come back as `asof_<name>`: null when no match, and all from
+    * the SAME matched build row — a NULL build value comes back as that
+    * row's NULL, never an older row's value. */
+  def asOf(probe: DataFrame, build: DataFrame, keys: Seq[String],
+      probeTs: String, buildTs: String, buildVals: Seq[String],
+      forward: Boolean = false, tiebreak: Option[String] = None): DataFrame = {
+    val hit = asOfMarked(probe, build, keys, probeTs, buildTs, buildVals,
+      tiebreak, "__hit" -> forward)
+    buildVals.foldLeft(hit)((df, c) => df.withColumn(s"asof_$c", col(s"__hit.$c")))
+      .drop("__hit")
   }
 
-  /** Forward as-of: each 'error' enriched with the EARLIEST same-user
-    * 'purchase' at ts >= error ts — the joinAsof formulation with time
-    * reversed (latest-first scan makes earliest-at-or-after a running
-    * last; build rows still sort before probes at equal ts => ">="). */
-  private def joinAsofForward(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("next_ts", last(col("b_ts"), ignoreNulls = true).over(w))
-      .withColumn("next_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"), col("next_ts"),
-        col("next_value"))
-      .orderBy("event_id")
+  /** The as-of pass behind [[asOf]]: every probe row plus, per
+    * (name, forward) mark, the matched build row as a struct of
+    * `buildVals` (null when none). The marks are windows over the same
+    * union-tagged frame and key partitioning — several directions cost
+    * extra sorts of one shuffle, never a join. The ONE row-marker struct
+    * carries every build value: last(ignoreNulls) skips only probe rows
+    * (whose marker is a NULL struct), never a matched row's NULL value. */
+  private def asOfMarked(probe: DataFrame, build: DataFrame, keys: Seq[String],
+      probeTs: String, buildTs: String, buildVals: Seq[String],
+      tiebreak: Option[String], marks: (String, Boolean)*): DataFrame = {
+    require(keys.nonEmpty && buildVals.nonEmpty)
+    val probeCols = probe.columns.toSeq.filterNot(keys.contains)
+    val tb = tiebreak.toSeq
+    val bSide = build.select(
+      keys.map(col) ++ Seq(col(buildTs).as("__ts"), lit(0).as("__side")) ++
+        tb.map(c => col(c).as("__tb")) ++
+        probeCols.map(c => lit(null).cast(probe.schema(c).dataType).as(c)) ++
+        Seq(struct(buildVals.map(col): _*).as("__b")): _*)
+    val pSide = probe.select(
+      keys.map(col) ++ Seq(col(probeTs).as("__ts"), lit(1).as("__side")) ++
+        tb.map(c => col(c).as("__tb")) ++ probeCols.map(col) ++
+        Seq(lit(null).cast(StructType(buildVals.map(build.schema(_))))
+          .as("__b")): _*)
+    marks.foldLeft(bSide.unionByName(pSide)) { case (df, (name, forward)) =>
+      val ord = if (forward) col("__ts").desc else col("__ts").asc
+      val w = Window.partitionBy(keys.map(col): _*)
+        .orderBy(ord +: col("__side") +: tb.map(_ => col("__tb")): _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      df.withColumn(name, last(col("__b"), ignoreNulls = true).over(w))
+    }.filter(col("__side") === 1).drop("__ts", "__side", "__tb", "__b")
   }
+
+  /** The as-of queries' sides: each 'error' event probes the same user's
+    * 'purchase' rows; both keep their event_id as the window tie-break, so
+    * two purchases at an identical (user, ts) cannot make the pick
+    * shuffle-order-dependent (the fixtures are (user_id, ts)-unique, but
+    * determinism shouldn't rely on it). */
+  private def errorsAndPurchases(s: SparkSession,
+      d: String): (DataFrame, DataFrame) = {
+    val ev = U.events(s, d)
+    (ev.filter(col("event_type") === "error")
+      .select(col("event_id"), col("user_id"), col("ts")),
+     ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("event_id"), col("value")))
+  }
+
+  private def purchaseAsOf(s: SparkSession, d: String,
+      forward: Boolean): DataFrame = {
+    val (probe, build) = errorsAndPurchases(s, d)
+    asOf(probe, build, Seq("user_id"), "ts", "ts", Seq("ts", "value"),
+      forward, Some("event_id"))
+  }
+
+  /** As-of join: each 'error' event enriched with the latest 'purchase' of
+    * the same user at ts <= error ts, through the [[asOf]] kernel.
+    * Oracle: DuckDB's native ASOF LEFT JOIN. */
+  private def joinAsof(s: SparkSession, d: String): DataFrame =
+    purchaseAsOf(s, d, forward = false)
+      .select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"),
+        col("asof_value"))
+      .orderBy("event_id")
+
+  /** Forward as-of: each 'error' enriched with the EARLIEST same-user
+    * 'purchase' at ts >= error ts — the [[asOf]] kernel with time reversed
+    * (latest-first scan makes earliest-at-or-after a running last; build
+    * rows still sort before probes at equal ts => ">="). */
+  private def joinAsofForward(s: SparkSession, d: String): DataFrame =
+    purchaseAsOf(s, d, forward = true)
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("asof_ts").as("next_ts"), col("asof_value").as("next_value"))
+      .orderBy("event_id")
 
   /** Null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL keys match
     * each other instead of vanishing — the semantics a dim with an "unknown"
@@ -172,40 +203,21 @@ object Joins {
 
   /** Nearest-in-time as-of (sensor-alignment join): each 'error' enriched
     * with the same-user 'purchase' CLOSEST in time, either direction, ties
-    * to the earlier row. One union-tagged frame, two window passes (asc +
-    * desc — two sorts of the same shuffle, still no join operator), then a
-    * pick by integer-µs distance. */
+    * to the earlier row. The as-of pass with two marks (asc + desc — two
+    * sorts of the same shuffle, still no join operator), then a pick by
+    * integer-µs distance. */
   private def joinAsofNearest(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    val wB = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val both = tagged
-      .withColumn("prev_ts", last(col("b_ts"), ignoreNulls = true).over(wB))
-      .withColumn("prev_value", last(col("b_value"), ignoreNulls = true).over(wB))
-      .withColumn("next_ts", last(col("b_ts"), ignoreNulls = true).over(wF))
-      .withColumn("next_value", last(col("b_value"), ignoreNulls = true).over(wF))
-      .filter(col("side") === 1)
-    val dPrev = unix_micros(col("ts")) - unix_micros(col("prev_ts"))
-    val dNext = unix_micros(col("next_ts")) - unix_micros(col("ts"))
-    val takeBackward = col("next_ts").isNull ||
-      (col("prev_ts").isNotNull && dPrev <= dNext)
+    val (probe, build) = errorsAndPurchases(s, d)
+    val both = asOfMarked(probe, build, Seq("user_id"), "ts", "ts",
+      Seq("ts", "value"), Some("event_id"), "__prev" -> false, "__next" -> true)
+    val dPrev = unix_micros(col("ts")) - unix_micros(col("__prev.ts"))
+    val dNext = unix_micros(col("__next.ts")) - unix_micros(col("ts"))
+    val takeBackward = col("__next.ts").isNull ||
+      (col("__prev.ts").isNotNull && dPrev <= dNext)
     both.select(col("event_id"), col("user_id"), col("ts"),
-      when(takeBackward, col("prev_ts")).otherwise(col("next_ts")).as("nearest_ts"),
-      when(takeBackward, col("prev_value")).otherwise(col("next_value")).as("nearest_value"),
+      when(takeBackward, col("__prev.ts")).otherwise(col("__next.ts")).as("nearest_ts"),
+      when(takeBackward, col("__prev.value")).otherwise(col("__next.value"))
+        .as("nearest_value"),
       when(takeBackward, dPrev).otherwise(dNext).as("dist_us"))
       .orderBy("event_id")
   }
@@ -291,29 +303,12 @@ object Joins {
     joinBucketedCore(s, d).orderBy("o_orderkey")
 
   /** Tolerance-bounded as-of (pandas merge_asof's `tolerance`): the
-    * [[joinAsof]] formulation, then matches older than 1 hour are nulled
-    * out — a stale quote must not enrich a trade. Same single sort+window,
-    * no join operator; the tolerance is a post-pick projection. */
+    * [[asOf]] kernel, then matches older than 1 hour are nulled out — a
+    * stale quote must not enrich a trade. Same single sort+window, no join
+    * operator; the tolerance is a post-pick projection. */
   private def joinAsofTolerance(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val inTol = col("asof_ts") >= col("ts") - expr("INTERVAL 1 HOUR")
-    tagged
-      .withColumn("asof_ts", last(col("b_ts"), ignoreNulls = true).over(w))
-      .withColumn("asof_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
+    purchaseAsOf(s, d, forward = false)
       .select(col("event_id"), col("user_id"), col("ts"),
         when(inTol, col("asof_ts")).as("asof_ts"),
         when(inTol, col("asof_value")).as("asof_value"))

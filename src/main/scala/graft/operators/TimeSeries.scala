@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{OSQL, U}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,28 +19,12 @@ object TimeSeries {
     * funnel-stage timestamps, one row per user) may broadcast into the event
     * stream. |users| is data-derived — at the 100 TB target it is 10⁸–10⁹
     * rows, far past any broadcast budget — so every anchor join dispatches
-    * through [[anchorGate]]: broadcast below the cap (map-side, no event
+    * through [[U.sizeGate]]: broadcast below the cap (map-side, no event
     * shuffle), plain shuffle-hash equi-join above it. Same pattern and
     * default as [[Graphs.PrBroadcastNodeCap]]; 1M narrow (user, ts) rows is
     * ~16 MB serialized, comfortably inside Spark's 8 GB broadcast hard cap
     * and the default driver memory budget. */
   private[graft] val UserAnchorCap = U.BroadcastRowCap
-
-  /** Gate a per-user anchor frame: persist it (every caller consumes it at
-    * least twice — the gating count plus >=1 join), count it once, and
-    * return the persisted frame plus a join-side wrapper. Below `cap`
-    * the wrapper is an explicit `broadcast` (derived-frame size estimates
-    * otherwise push the planner to sort-merge over the full event stream);
-    * above it, `hint("shuffle_hash")` — the anchor side exchanges on
-    * user_id, the event side hash-joins without a sort, and AQE cannot
-    * re-broadcast what the gate declined. Both paths are the same equi-join
-    * on user_id, so results are identical by construction (StressSpec
-    * asserts cap=0 parity). In production the count on the persisted frame
-    * costs one narrow agg job; when the anchor is a raw table scan the
-    * decision could come from parquet footer row counts instead — see
-    * SCALE.md "posture gates". Delegates to the generic [[U.sizeGate]]. */
-  private[graft] def anchorGate(f: DataFrame,
-      cap: Long): (DataFrame, DataFrame => DataFrame) = U.sizeGate(f, cap)
 
   /** 1-hour tumbling window aggregation via Spark's window() — start/end
     * flattened out of the struct for the oracle compare. */
@@ -60,22 +44,33 @@ object TimeSeries {
       .select(col("window.start").as("wstart"), col("n"), col("sum_value"))
       .orderBy("wstart")
 
-  /** 30-minute-gap sessionization: flag gap > 30min, running sum of flags
-    * numbers the sessions, then one aggregate per (user, session). */
-  private def tsSessionize(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+  /** Gap-based sessionization kernel: appends a `session_id` column
+    * numbering each key's sessions (1-based), a new session whenever the
+    * gap to the previous row exceeds `gapSeconds` — the running sum of
+    * gap flags. One shuffle+sort per key. Rows tying on (key, ts) share a
+    * session whatever their order; `tiebreak` extends the (key, ts) window
+    * order to make the row order itself deterministic. */
+  def sessionize(df: DataFrame, key: String, ts: String, gapSeconds: Long,
+      tiebreak: Option[String] = None): DataFrame = {
+    val w = Window.partitionBy(col(key))
+      .orderBy(col(ts) +: tiebreak.map(col).toSeq: _*)
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    U.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("new_sess")).over(run))
+    df.withColumn("__prev_us", lag(unix_micros(col(ts)), 1).over(w))
+      .withColumn("session_id", sum(
+        when(col("__prev_us").isNull ||
+          unix_micros(col(ts)) - col("__prev_us") > gapSeconds * 1000000L, 1L)
+          .otherwise(0L)).over(run))
+      .drop("__prev_us")
+  }
+
+  /** 30-minute-gap sessionization through [[sessionize]], then one
+    * aggregate per (user, session). */
+  private def tsSessionize(s: SparkSession, d: String): DataFrame =
+    sessionize(U.events(s, d), "user_id", "ts", 1800L, Some("event_id"))
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"), U.dsum(col("value")).as("sum_value"))
       .orderBy("user_id", "session_id")
-  }
 
   /** Resample each user's series to a daily grid (sequence+explode — no
     * driver-side loop) and forward-fill the last observed value. */
@@ -200,20 +195,15 @@ object TimeSeries {
 
   /** As-of enrichment applied to the time-series domain (SURVEY §2.8's
     * `ts_asof_enrich`): every event carries the user's latest prior-or-equal
-    * 'signup' value — same union-tag + running-last shape as join_asof. */
+    * 'signup' value — the [[Joins.asOf]] kernel, event_id tie-break. */
   private def tsAsofEnrich(s: SparkSession, d: String): DataFrame = {
     val ev = U.events(s, d)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tagged = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("value").as("b_value"))
-      .unionByName(ev.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(DoubleType).as("b_value")))
-    tagged
-      .withColumn("signup_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"), col("signup_value"))
+    Joins.asOf(ev.select(col("event_id"), col("user_id"), col("ts")),
+        ev.filter(col("event_type") === "signup")
+          .select(col("user_id"), col("ts"), col("event_id"), col("value")),
+        Seq("user_id"), "ts", "ts", Seq("value"), tiebreak = Some("event_id"))
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("asof_value").as("signup_value"))
       .orderBy("event_id")
   }
 
@@ -284,7 +274,7 @@ object TimeSeries {
   /** Conversion funnel (sequence match): each user's FIRST click, then the
     * first purchase within the following 7 days — the classic
     * industry-time-sequence funnel stage. Two hash-aggs + one anchor
-    * join back, dispatched through [[anchorGate]] (the per-user anchor
+    * join back, dispatched through [[U.sizeGate]] (the per-user anchor
     * frame is |users|-sized — broadcast below [[UserAnchorCap]],
     * shuffle-hash above); no window over the full event stream. */
   private def tsFunnel(s: SparkSession, d: String): DataFrame =
@@ -293,7 +283,7 @@ object TimeSeries {
   private[graft] def tsFunnelImpl(s: SparkSession, d: String,
       cap: Long): DataFrame = {
     val ev = U.events(s, d)
-    val (anchor, wa) = anchorGate(
+    val (anchor, wa) = U.sizeGate(
       ev.filter(col("event_type") === "click")
         .groupBy(col("user_id").as("u")).agg(min(col("ts")).as("t_click")), cap)
     val conv = ev.join(wa(anchor), col("user_id") === col("u"))
@@ -320,7 +310,7 @@ object TimeSeries {
       cap: Long): DataFrame = {
     val ev = U.events(s, d)
       .select(col("user_id"), date_trunc("DAY", col("ts")).as("day"))
-    val (cohort, wc) = anchorGate(
+    val (cohort, wc) = U.sizeGate(
       ev.groupBy(col("user_id").as("u")).agg(min(col("day")).as("cohort_day")), cap)
     ev.join(wc(cohort), col("user_id") === col("u"))
       .select(col("user_id"), col("cohort_day"),
@@ -334,7 +324,7 @@ object TimeSeries {
 
   /** Multi-stage funnel (windowFunnel shape): signup → click → purchase,
     * each stage within 7 days of the previous one, max stage per user.
-    * Chained [[anchorGate]]-dispatched anchor joins — each stage frame is
+    * Chained [[U.sizeGate]]-dispatched anchor joins — each stage frame is
     * |users|-sized, broadcast only below [[UserAnchorCap]]. */
   private def tsFunnelSteps(s: SparkSession, d: String): DataFrame =
     tsFunnelStepsImpl(s, d, UserAnchorCap)
@@ -349,10 +339,10 @@ object TimeSeries {
           col("ts") >= col(prevTs) &&
           col("ts") <= col(prevTs) + expr("INTERVAL 7 DAYS"))
         .groupBy(ev("user_id").as("u2")).agg(min(col("ts")).as(out))
-    val (s1, w1) = anchorGate(
+    val (s1, w1) = U.sizeGate(
       ev.filter(col("event_type") === "signup")
         .groupBy(col("user_id").as("u")).agg(min(col("ts")).as("t_signup")), cap)
-    val (s2, w2) = anchorGate(
+    val (s2, w2) = U.sizeGate(
       stageAfter(s1, w1, "t_signup", "click", "t_click")
         .select(col("u2").as("u"), col("t_click")), cap)
     val s3 = stageAfter(s2, w2, "t_click", "purchase", "t_purchase")
@@ -1355,49 +1345,70 @@ object TimeSeries {
       .orderBy("event_id")
   }
 
-  /** Three-step conversion funnel within a 24-hour window (the
-    * windowFunnel shape): the user's FIRST click anchors the window, then
-    * the first view strictly after it, then the first purchase strictly
-    * after that view — all inside anchor+24 h; funnel_level = deepest
-    * step reached (0–3), earliest-completion semantics. Generalizes
-    * [[tsFunnel]]'s 2-step form to an ordered chain. Each step is one
-    * filtered hash-agg over events joined to the |users|-sized anchor
-    * frame of the previous step, dispatched through [[anchorGate]]
-    * (broadcast below [[UserAnchorCap]], shuffle-hash above) — never a
-    * per-user event-sequence collect, so the shape survives any event
-    * volume. */
+  /** Multi-step windowed conversion funnel kernel over (key, ts, type):
+    * the deepest PREFIX of `steps` completed in strict order inside
+    * `windowSeconds` of the first step's earliest occurrence per key —
+    * the windowFunnel shape, earliest-completion semantics. Each step is
+    * one filtered hash-agg joined to the anchor frame of the previous
+    * step; a key that misses step i is absent from that step's frame
+    * and can never match step i+1, so `funnel_level` counts a true
+    * prefix. Returns every key
+    * with each step's completion time t1..tN and funnel_level
+    * (0..steps.length) — never a per-key event-sequence collect, so the
+    * shape survives any event volume. The anchor frames are
+    * |keys|-cardinality, so they dispatch through [[U.sizeGate]]:
+    * broadcast below `broadcastCap` rows, shuffle-hash equi-join above
+    * it. The verdict is measured once on the first stage's anchors (one
+    * count on a persisted frame, released with `U.releaseTracked()`);
+    * every later stage's key set is a subset, so the verdict covers the
+    * whole chain. */
+  def windowFunnel(df: DataFrame, key: String, ts: String, typeCol: String,
+      steps: Seq[String], windowSeconds: Long,
+      broadcastCap: Long = U.BroadcastRowCap): DataFrame = {
+    require(steps.nonEmpty)
+    // stage i: (__k<i>, t<i>, __e<i>) for the keys that completed step i,
+    // __e<i> the window's end in µs; each is persisted (released with
+    // U.releaseTracked()) because the next step and the final assembly
+    // both join it
+    val (first, wrap) = U.sizeGate(
+      df.filter(col(typeCol) === steps.head)
+        .groupBy(col(key).as("__k1")).agg(min(col(ts)).as("t1"))
+        .withColumn("__e1", unix_micros(col("t1")) + windowSeconds * 1000000L),
+      broadcastCap)
+    val stages = (2 to steps.length).scanLeft(wrap(first)) { (prev, i) =>
+      wrap(U.track(df.join(prev, col(key) === col(s"__k${i - 1}"))
+        .filter(col(typeCol) === steps(i - 1) && col(ts) > col(s"t${i - 1}") &&
+          unix_micros(col(ts)) <= col(s"__e${i - 1}"))
+        .groupBy(col(s"__k${i - 1}").as(s"__k$i"),
+          col(s"__e${i - 1}").as(s"__e$i"))
+        .agg(min(col(ts)).as(s"t$i")).persist()))
+    }
+    val level = (1 to steps.length)
+      .map(i => when(col(s"t$i").isNotNull, 1L).otherwise(0L))
+      .reduce(_ + _)
+    stages.zipWithIndex
+      .foldLeft(df.select(col(key)).distinct()) { case (out, (st, i)) =>
+        out.join(st, col(key) === col(s"__k${i + 1}"), "left_outer")
+          .drop(s"__k${i + 1}", s"__e${i + 1}")
+      }
+      .withColumn("funnel_level", level)
+  }
+
+  /** Three-step conversion funnel within a 24-hour window through
+    * [[windowFunnel]]: the user's FIRST click anchors the window, then the
+    * first view strictly after it, then the first purchase strictly after
+    * that view — all inside anchor+24 h. Generalizes [[tsFunnel]]'s 2-step
+    * form to an ordered chain; `cap` is the anchor gate's broadcast cap. */
   private def tsWindowFunnel(s: SparkSession, d: String): DataFrame =
     tsWindowFunnelImpl(s, d, UserAnchorCap)
 
   private[graft] def tsWindowFunnelImpl(s: SparkSession, d: String,
-      cap: Long): DataFrame = {
-    val ev = U.events(s, d)
-    val (t1, w1) = anchorGate(
-      ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id").as("u1")).agg(min(col("ts")).as("t1")), cap)
-    val (t2, w2) = anchorGate(
-      ev.join(w1(t1), col("user_id") === col("u1"))
-        .filter(col("event_type") === "view" && col("ts") > col("t1") &&
-          col("ts") <= col("t1") + expr("INTERVAL 24 HOURS"))
-        .groupBy(col("user_id").as("u2"), col("t1").as("t1b"))
-        .agg(min(col("ts")).as("t2")), cap)
-    val (t3, w3) = anchorGate(
-      ev.join(w2(t2), col("user_id") === col("u2"))
-        .filter(col("event_type") === "purchase" && col("ts") > col("t2") &&
-          col("ts") <= col("t1b") + expr("INTERVAL 24 HOURS"))
-        .groupBy(col("user_id").as("u3")).agg(min(col("ts")).as("t3")), cap)
-    ev.select(col("user_id")).distinct()
-      .join(w1(t1), col("user_id") === col("u1"), "left_outer")
-      .join(w2(t2.select(col("u2"), col("t2"))),
-        col("user_id") === col("u2"), "left_outer")
-      .join(w3(t3), col("user_id") === col("u3"), "left_outer")
-      .select(col("user_id"),
-        (when(col("t3").isNotNull, 3L)
-          .when(col("t2").isNotNull, 2L)
-          .when(col("t1").isNotNull, 1L).otherwise(0L)).as("funnel_level"),
-        col("t1"), col("t2"), col("t3"))
+      cap: Long): DataFrame =
+    windowFunnel(U.events(s, d), "user_id", "ts", "event_type",
+        Seq("click", "view", "purchase"), 86400L, cap)
+      .select(col("user_id"), col("funnel_level"), col("t1"), col("t2"),
+        col("t3"))
       .orderBy("user_id")
-  }
 
   /** Additive trend/seasonal/residual decomposition of each type's hourly
     * series — the STL-shaped one-pass variant an industrial monitor runs
@@ -1433,35 +1444,46 @@ object TimeSeries {
       .orderBy("event_type", "hidx")
   }
 
+  /** Two-threshold hysteresis alarm kernel over each `keys` partition's
+    * `ts`-ordered stream: ON above `hi`, OFF only below `lo`, latched via
+    * last(edge IGNORE NULLS) — the [[win_fill_forward]] primitive carrying
+    * alarm state instead of a fill value — so values oscillating between
+    * the thresholds cannot flap it. The thresholds are columns (constants
+    * or per-row values joined in), compared against the `value` column.
+    * Appends `alarm` (0/1) and `is_onset`; one window pass. Rows tying on
+    * (keys, ts) latch in an unspecified order unless `tiebreak` extends
+    * the ordering. */
+  def hysteresisAlarm(df: DataFrame, keys: Seq[String], ts: String,
+      value: Column, hi: Column, lo: Column,
+      tiebreak: Option[String] = None): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(ts) +: tiebreak.map(col).toSeq: _*)
+    val edge = when(value > hi, 1L).when(value < lo, 0L)
+    df.withColumn("alarm", coalesce(
+        last(edge, ignoreNulls = true)
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        lit(0L)))
+      .withColumn("is_onset", col("alarm") === 1L &&
+        coalesce(lag(col("alarm"), 1).over(w), lit(0L)) === 0L)
+  }
+
   /** Hysteresis alarm detection — the SCADA two-threshold alarm an
-    * industrial monitor runs on every sensor: the alarm turns ON when the
-    * value rises above the per-type Q3 and turns OFF only when it falls
-    * back below the per-type median, so values oscillating between the
-    * two thresholds cannot flap the alarm. The latched state is
-    * last(edge IGNORE NULLS) over the per-(user, type) ordered stream —
-    * the [[win_fill_forward]] primitive carrying alarm state instead of a
-    * fill value. Thresholds in exact quarter-cents (the agg_boxplot
-    * domain), every comparison integer; the tiny per-type threshold frame
-    * broadcasts. One window pass. */
+    * industrial monitor runs on every sensor: [[hysteresisAlarm]] per
+    * (user, type) with the alarm ON above the per-type Q3 and OFF only
+    * below the per-type median. Thresholds in exact quarter-cents (the
+    * agg_boxplot domain), every comparison integer; the tiny per-type
+    * threshold frame broadcasts. One window pass. */
   private def tsHysteresis(s: SparkSession, d: String): DataFrame = {
     val vc = U.cents(col("value"))
     val th = U.events(s, d).groupBy(col("event_type").as("et")).agg(
       floor(percentile(vc, lit(0.75)) * 4).cast(LongType).as("hi_qc"),
       floor(percentile(vc, lit(0.5)) * 4).cast(LongType).as("lo_qc"))
-    val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("ts"), col("event_id"))
-    U.events(s, d).join(broadcast(th), col("event_type") === col("et"))
-      .withColumn("edge",
-        when(vc * 4 > col("hi_qc"), lit(1L))
-          .when(vc * 4 < col("lo_qc"), lit(0L)))
-      .withColumn("alarm", coalesce(
-        last(col("edge"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-        lit(0L)))
-      .withColumn("prev_alarm", lag(col("alarm"), 1).over(w))
+    hysteresisAlarm(
+        U.events(s, d).join(broadcast(th), col("event_type") === col("et")),
+        Seq("user_id", "event_type"), "ts", vc * 4, col("hi_qc"), col("lo_qc"),
+        Some("event_id"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("alarm"),
-        (col("alarm") === 1L && coalesce(col("prev_alarm"), lit(0L)) === 0L)
-          .as("is_onset"))
+        col("is_onset"))
       .orderBy("event_id")
   }
 
@@ -1541,35 +1563,49 @@ object TimeSeries {
         col("fin.p").as("variance"))
       .orderBy("user_id")
 
-  /** Rolling OLS trend per user: slope and intercept of value-vs-index over
-    * the trailing 10 points, emitted once the frame is full. All four power
-    * sums (Σx, Σy, Σxy, Σx²) are exact Longs over one ROWS frame — the only
-    * doubles are the two closing divisions, with the oracle mirroring the
-    * operation tree token-for-token. One shuffle (the per-user sort); the
-    * window never materializes more than the 10-row frame per position, so
-    * the shape is the same at 100 TB. x is the per-user row index, so slope
-    * is value-units per step; products stay far inside Long (idx ≤ rows per
-    * user, cents ≤ 5e4 → idx·cents·10 ≤ 1e12 even at 1e6 rows/user). */
-  private def tsRollingOls(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val f = w.rowsBetween(-9, Window.currentRow)
-    U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .withColumn("sx", sum(col("rn")).over(f))
-      .withColumn("sy", sum(col("vc")).over(f))
-      .withColumn("sxy", sum(col("rn") * col("vc")).over(f))
-      .withColumn("sxx", sum(col("rn") * col("rn")).over(f))
-      .filter(col("rn") >= 10)
+  /** Rolling OLS trend kernel over (key, ts, value): slope and intercept
+    * of value-vs-row-index over the trailing `window` points per key,
+    * emitted once the frame is full. All four power sums (Σx, Σy, Σxy,
+    * Σx²) are exact Longs over one ROWS frame — the only doubles are the
+    * two closing divisions, with the oracle mirroring the operation tree
+    * token-for-token. One shuffle (the per-key sort); the window never
+    * materializes more than the `window`-row frame per position, so the
+    * shape is the same at 100 TB. x is the per-key row index, so slope is
+    * value-units per step; products stay far inside Long (idx ≤ rows per
+    * key, cents ≤ 5e4 → idx·cents·10 ≤ 1e12 even at 1e6 rows/key). Rows
+    * tying on (key, ts) index in an unspecified order unless `tiebreak`
+    * extends the ordering. Appends `slope` and `intercept`. */
+  def rollingOls(df: DataFrame, key: String, ts: String, value: String,
+      window: Int = 10, tiebreak: Option[String] = None): DataFrame = {
+    require(window >= 2)
+    val w = Window.partitionBy(col(key))
+      .orderBy(col(ts) +: tiebreak.map(col).toSeq: _*)
+    val f = w.rowsBetween(-(window - 1), Window.currentRow)
+    val n = window.toDouble
+    df.withColumn("__vc", U.cents(col(value)))
+      .withColumn("__rn", row_number().over(w).cast(LongType))
+      .withColumn("__sx", sum(col("__rn")).over(f))
+      .withColumn("__sy", sum(col("__vc")).over(f))
+      .withColumn("__sxy", sum(col("__rn") * col("__vc")).over(f))
+      .withColumn("__sxx", sum(col("__rn") * col("__rn")).over(f))
+      .filter(col("__rn") >= window)
       .withColumn("slope",
-        (lit(10.0) * col("sxy") - col("sx").cast(DoubleType) * col("sy")) /
-          (lit(100.0) * (lit(10.0) * col("sxx") -
-            col("sx").cast(DoubleType) * col("sx"))))
-      .select(col("event_id"), col("user_id"), col("ts"), col("slope"),
-        ((col("sy").cast(DoubleType) / lit(100.0) -
-          col("slope") * col("sx")) / lit(10.0)).as("intercept"))
-      .orderBy("event_id")
+        (lit(n) * col("__sxy") - col("__sx").cast(DoubleType) * col("__sy")) /
+          (lit(100.0) * (lit(n) * col("__sxx") -
+            col("__sx").cast(DoubleType) * col("__sx"))))
+      .withColumn("intercept",
+        (col("__sy").cast(DoubleType) / lit(100.0) -
+          col("slope") * col("__sx")) / lit(n))
+      .drop("__vc", "__rn", "__sx", "__sy", "__sxy", "__sxx")
   }
+
+  /** Rolling OLS trend per user over the trailing 10 points through
+    * [[rollingOls]], event_id tie-break. */
+  private def tsRollingOls(s: SparkSession, d: String): DataFrame =
+    rollingOls(U.events(s, d), "user_id", "ts", "value", 10, Some("event_id"))
+      .select(col("event_id"), col("user_id"), col("ts"), col("slope"),
+        col("intercept"))
+      .orderBy("event_id")
 
   /** Full-series rescaled-range (R/S) statistic per user — the building
     * block of a Hurst-exponent estimate (the exponent itself is the log-log
@@ -1636,81 +1672,93 @@ object TimeSeries {
       .orderBy("user_id")
   }
 
-  /** Burst detection per event type: maximal runs of >=3 CONSECUTIVE hours
-    * each at least 4/3× the type's mean hourly rate. The threshold compare
-    * is exact-integer (3·n_b·n_hours >= 4·total ⟺ n_b >= (4/3)·mean — no
-    * division), runs come from the gaps-islands trick on the hour index.
-    * Two hash-aggs + one per-type window over HOURLY buckets (≤ |hours|
-    * rows — the event stream itself is never windowed), then one rollup
-    * per island: the whole query is bucket-cardinality after the first
-    * aggregation regardless of event volume. */
-  private def tsBurst(s: SparkSession, d: String): DataFrame = {
-    val hourly = U.events(s, d)
-      .groupBy(col("event_type"), date_trunc("HOUR", col("ts")).as("h"))
-      .agg(count(lit(1)).as("nb"))
-    // per-type totals as a WINDOW over the event_type partitioning the
-    // islands pass below already needs (r15, guide §2.4): the previous
-    // groupBy + broadcast-join re-aggregated the UNPERSISTED hourly frame
-    // from a second full events scan; same exact sums/counts, one scan,
-    // one shared exchange
-    val wt = Window.partitionBy(col("event_type"))
-    val wr = Window.partitionBy(col("event_type")).orderBy(col("hidx"))
-    hourly
-      .withColumn("s", sum(col("nb")).over(wt))
-      .withColumn("c", count(lit(1)).over(wt))
-      .filter(lit(3L) * col("nb") * col("c") >= lit(4L) * col("s"))
-      .withColumn("hidx", expr("unix_micros(h) DIV 3600000000"))
-      .withColumn("grp", col("hidx") - row_number().over(wr))
-      .groupBy(col("event_type"), col("grp"))
-      .agg(min(col("h")).as("burst_start"), max(col("h")).as("burst_end"),
-        count(lit(1)).as("n_hours"), sum(col("nb")).as("n_events"))
-      .filter(col("n_hours") >= 3)
-      .select(col("event_type"), col("burst_start"), col("burst_end"),
-        col("n_hours"), col("n_events"))
-      .orderBy("event_type", "burst_start")
+  /** Burst detection kernel over (typeCol, ts): maximal runs of >=
+    * `minRun` CONSECUTIVE buckets each at least num/den × the type's mean
+    * bucket rate. The threshold compare is exact-integer (den·n_b·buckets
+    * >= num·total — no division), runs come from the gaps-islands trick
+    * on the bucket index. One hash-agg, then the per-type totals and the
+    * islands pass are windows over the SAME type partitioning (one
+    * exchange, the event stream scanned once and never windowed), then
+    * one rollup per island: everything after the first aggregation is
+    * bucket-cardinality regardless of event volume. Returns (typeCol,
+    * burst_start, burst_end — the end of the run's last bucket, exclusive
+    * — n_buckets, n_events). */
+  def burstRuns(df: DataFrame, typeCol: String, ts: String,
+      bucketSeconds: Long = 3600L, num: Long = 4L, den: Long = 3L,
+      minRun: Int = 3): DataFrame = {
+    require(bucketSeconds > 0 && num > 0 && den > 0 && minRun >= 1)
+    val usPerBucket = bucketSeconds * 1000000L
+    val wt = Window.partitionBy(col(typeCol))
+    val wr = wt.orderBy(col("__bidx"))
+    df.groupBy(col(typeCol),
+        expr(s"unix_micros($ts) DIV $usPerBucket").as("__bidx"))
+      .agg(count(lit(1)).as("__nb"))
+      .withColumn("__s", sum(col("__nb")).over(wt))
+      .withColumn("__c", count(lit(1)).over(wt))
+      .filter(lit(den) * col("__nb") * col("__c") >= lit(num) * col("__s"))
+      .withColumn("__grp", col("__bidx") - row_number().over(wr))
+      .groupBy(col(typeCol), col("__grp"))
+      .agg(timestamp_micros(min(col("__bidx")) * usPerBucket)
+          .as("burst_start"),
+        timestamp_micros((max(col("__bidx")) + 1) * usPerBucket)
+          .as("burst_end"),
+        count(lit(1)).as("n_buckets"), sum(col("__nb")).as("n_events"))
+      .filter(col("n_buckets") >= minRun)
+      .drop("__grp")
   }
 
-  /** Peak concurrency per day: sweep-line over the 30-min-gap user
-    * sessions — each session contributes (+1 at start, −1 at end), starts
-    * order before ends at equal instants (inclusive intervals), and the
-    * daily maximum of the running count is the answer. The running sum is
-    * NOT one global sort: points are blocked by day (per-day window), day
-    * baselines come from a prefix over the ~|days| per-day delta totals —
-    * the sample_weighted two-level scan-prefix shape, so the only
-    * single-partition pass touches |days| rows. Day entry level counts
-    * sessions spanning midnight (GREATEST with the baseline). Ties on
-    * (t, delta) cannot disturb the max: each tied row adds the same delta,
-    * so the prefix SET is order-independent. */
-  private def tsMaxConcurrency(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = U.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L).otherwise(0L))
-      .withColumn("sid", sum(col("new_sess")).over(run))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
-    val pts = sess.select(col("st").as("t"), lit(1L).as("delta"))
-      .unionByName(sess.select(col("en").as("t"), lit(-1L).as("delta")))
-      .withColumn("day", date_trunc("DAY", col("t")))
-    val offs = pts.groupBy(col("day").as("od")).agg(sum(col("delta")).as("dsum"))
-      .withColumn("off", coalesce(
-        sum(col("dsum")).over(Window.orderBy(col("od"))
+  /** Burst detection per event type through [[burstRuns]]: runs of >=3
+    * consecutive hours each at least 4/3× the type's mean hourly rate;
+    * burst_end is the START of the run's last hour. */
+  private def tsBurst(s: SparkSession, d: String): DataFrame =
+    burstRuns(U.events(s, d), "event_type", "ts")
+      .select(col("event_type"), col("burst_start"),
+        (col("burst_end") - expr("INTERVAL 1 HOUR")).as("burst_end"),
+        col("n_buckets").as("n_hours"), col("n_events"))
+      .orderBy("event_type", "burst_start")
+
+  /** Peak concurrency per day kernel: sweep-line over the `gapSeconds`
+    * [[sessionize]] sessions of (key, ts) activity — each session
+    * contributes (+1 at start, −1 at end), starts order before ends at
+    * equal instants (inclusive intervals), and the daily maximum of the
+    * running count is the answer. The running sum is NOT one global sort:
+    * points are blocked by day (per-day window), day baselines come from
+    * a prefix over the ~|days| per-day delta totals — the sample_weighted
+    * two-level scan-prefix shape, so the only single-partition pass
+    * touches |days| rows. Day entry level counts sessions spanning
+    * midnight (GREATEST with the baseline). Ties on (t, delta) cannot
+    * disturb the max: each tied row adds the same delta, so the prefix
+    * SET is order-independent, and rows tying on (key, ts) always share
+    * a session, so no tie-break is needed. Returns (day, max_concurrent). */
+  def maxConcurrency(df: DataFrame, key: String, ts: String,
+      gapSeconds: Long = 1800L): DataFrame = {
+    val sess = sessionize(df, key, ts, gapSeconds)
+      .groupBy(col(key), col("session_id"))
+      .agg(min(col(ts)).as("__st"), max(col(ts)).as("__en"))
+    val pts = sess.select(col("__st").as("__t"), lit(1L).as("__d"))
+      .unionByName(sess.select(col("__en").as("__t"), lit(-1L).as("__d")))
+      .withColumn("__day", date_trunc("DAY", col("__t")))
+    val offs = pts.groupBy(col("__day").as("__od"))
+      .agg(sum(col("__d")).as("__ds"))
+      .withColumn("__off", coalesce(
+        sum(col("__ds")).over(Window.orderBy(col("__od"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("od"), col("off"))
-    val wd = Window.partitionBy(col("day"))
-      .orderBy(col("t"), col("delta").desc)
+      .select(col("__od"), col("__off"))
+    val wd = Window.partitionBy(col("__day"))
+      .orderBy(col("__t"), col("__d").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pts.withColumn("rsum", sum(col("delta")).over(wd))
-      .groupBy(col("day")).agg(max(col("rsum")).as("peak_in_day"))
-      .join(offs, col("day") === col("od"))
-      .select(col("day"),
-        greatest(col("off") + col("peak_in_day"), col("off"))
+    pts.withColumn("__rs", sum(col("__d")).over(wd))
+      .groupBy(col("__day")).agg(max(col("__rs")).as("__peak"))
+      .join(offs, col("__day") === col("__od"))
+      .select(col("__day").as("day"),
+        greatest(col("__off") + col("__peak"), col("__off"))
           .as("max_concurrent"))
-      .orderBy("day")
   }
+
+  /** Peak concurrency per day over the 30-min-gap user sessions through
+    * [[maxConcurrency]]. */
+  private def tsMaxConcurrency(s: SparkSession, d: String): DataFrame =
+    maxConcurrency(U.events(s, d), "user_id", "ts", 1800L).orderBy("day")
 
   /** Autocorrelation function of each type's hourly-total series at lags
     * 1..12 — the seasonality scan behind decompose/holt-winters period
@@ -2568,71 +2616,102 @@ object TimeSeries {
       .orderBy("event_type")
   }
 
-  /** Hampel filter per user: each reading flagged when it sits more than
-    * 3 scaled MADs from the trailing-7 rolling median — the robust spike
-    * detector that a single outlier cannot drag (unlike a z-score whose
-    * mean and σ it would inflate). The window's median and MAD are EXACT
-    * order statistics of the sorted 7-element frame array (both odd picks
-    * — no halving), and the verdict is the integer cross-multiplication
-    * |x−med|·10⁴ > 44478·mad (3·1.4826 scaled — no float anywhere). One
-    * window sort per user; the frame array is constant-size 7. */
-  private def tsHampel(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val f = w.rowsBetween(-6, Window.currentRow)
-    U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .withColumn("win", sort_array(collect_list(col("vc")).over(f)))
-      .filter(col("rn") >= 7)
-      .withColumn("med7", element_at(col("win"), 4))
-      .withColumn("mad7", element_at(
-        sort_array(transform(col("win"), x => abs(x - col("med7")))), 4))
-      .select(col("user_id"), col("ts"), col("event_id"), col("vc"),
-        col("med7"), col("mad7"),
-        (abs(col("vc") - col("med7")) * 10000L >
-          lit(44478L) * col("mad7")).as("is_outlier"))
-      .orderBy("user_id", "ts", "event_id")
+  /** Hampel filter kernel over (key, ts, value): flags readings more than
+    * `nMads` scaled MADs from the trailing-`window` rolling median — the
+    * robust spike detector a single outlier cannot drag (a z-score's mean
+    * and σ it WOULD inflate). `window` must be odd so the window's median
+    * and MAD are EXACT single picks of the sorted frame array (no
+    * halving), and the verdict is the integer cross-multiplication
+    * |x−med|·10⁴ > round(nMads·1.4826·10⁴)·mad — no float anywhere.
+    * Emitted only once the frame is full; one window sort per key, the
+    * frame array is constant-size `window`. Appends `med`, `mad` (cents)
+    * and `is_outlier`. Rows tying on (key, ts) make the window contents
+    * nondeterministic unless `tiebreak` (a unique column, e.g. an event
+    * id) pins the order. */
+  def hampelFilter(df: DataFrame, key: String, ts: String, value: String,
+      window: Int = 7, nMads: Double = 3.0,
+      tiebreak: Option[String] = None): DataFrame = {
+    require(window >= 3 && window % 2 == 1, s"window must be odd >= 3")
+    val w = Window.partitionBy(col(key))
+      .orderBy(col(ts) +: tiebreak.map(col).toSeq: _*)
+    val f = w.rowsBetween(-(window - 1), Window.currentRow)
+    val mid = (window + 1) / 2
+    val scale = math.round(nMads * 1.4826 * 10000)
+    df.withColumn("__vc", U.cents(col(value)))
+      .withColumn("__rn", row_number().over(w).cast(LongType))
+      .withColumn("__win", sort_array(collect_list(col("__vc")).over(f)))
+      .filter(col("__rn") >= window)
+      .withColumn("med", element_at(col("__win"), mid))
+      .withColumn("mad", element_at(
+        sort_array(transform(col("__win"), x => abs(x - col("med")))), mid))
+      .withColumn("is_outlier",
+        abs(col("__vc") - col("med")) * 10000L > lit(scale) * col("mad"))
+      .drop("__vc", "__rn", "__win")
   }
 
-  /** Tabular (decision-interval) CUSUM alarm per event type: the page-one
-    * SPC recursion S⁺ᵢ = max(0, S⁺ᵢ₋₁ + x − μ − K) fired when S⁺ > H
-    * (and the mirrored S⁻ for downward drifts) — catches small sustained
-    * shifts the per-point [[tsSpcRules]] σ-bands miss. The recursion is
-    * NOT window-expressible directly, but its closed form is: S⁺ᵢ =
-    * cumᵢ − min(0, min_{j≤i} cumⱼ) over the deviation prefix sum — two
-    * running windows, no recursion. μ never divides: everything runs
-    * n-SCALED (d = n·(x−K) − Σx, threshold n·H) in Decimal(38,0), so the
-    * alarm verdicts are exact integers at any scale. K = 5.00, H = 50.00
-    * (cents). One |types|-row stats broadcast + one ordered pass. */
-  private def tsCusumAlarm(s: SparkSession, d: String): DataFrame = {
+  /** Hampel filter per user through [[hampelFilter]]: trailing-7 rolling
+    * median, 3 scaled MADs (44478 = round(3·1.4826·10⁴)). */
+  private def tsHampel(s: SparkSession, d: String): DataFrame =
+    hampelFilter(U.events(s, d), "user_id", "ts", "value", 7, 3.0,
+        Some("event_id"))
+      .select(col("user_id"), col("ts"), col("event_id"),
+        U.cents(col("value")).as("vc"), col("med").as("med7"),
+        col("mad").as("mad7"), col("is_outlier"))
+      .orderBy("user_id", "ts", "event_id")
+
+  /** Tabular (decision-interval) CUSUM alarm kernel over (key, ts, value):
+    * the page-one SPC recursion S⁺ᵢ = max(0, S⁺ᵢ₋₁ + x − μ − k) fired when
+    * S⁺ > h (and the mirrored S⁻ for downward drifts), against each key's
+    * own mean — catches small sustained shifts a per-point σ-band misses.
+    * The recursion is NOT window-expressible directly, but its closed
+    * form is: S⁺ᵢ = cumᵢ − min(0, min_{j≤i} cumⱼ) over the deviation
+    * prefix sum — two running windows, no recursion. μ never divides:
+    * everything runs n-SCALED (d = n·(x−k) − Σx, threshold n·h) in
+    * Decimal(38,0), so the verdicts are exact at any scale. The per-key
+    * (n, Σx) are full-partition windows over the same key partitioning as
+    * the running pass (one shuffle, no stats join). `k`/`h` are in the
+    * value's own units as decimal literals that promote exactly (e.g.
+    * 5.0, 50.0). Appends `cusum_high` / `cusum_low` booleans. Rows tying
+    * on (key, ts) fold in an unspecified order unless `tiebreak` extends
+    * the ordering. */
+  def cusumAlarm(df: DataFrame, key: String, ts: String, value: String,
+      k: Double = 5.0, h: Double = 50.0,
+      tiebreak: Option[String] = None): DataFrame = {
     val dec = DecimalType(38, 0)
-    val base = U.events(s, d).withColumn("vc", U.cents(col("value")))
-    val st = base.groupBy(col("event_type").as("et"))
-      .agg(count(lit(1)).as("n"), sum(col("vc")).as("sx"))
-    val w = Window.partitionBy(col("event_type"))
-      .orderBy(col("ts"), col("event_id"))
+    val w = Window.partitionBy(col(key))
+      .orderBy(col(ts) +: tiebreak.map(col).toSeq: _*)
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val hiN = col("n").cast(dec) * lit(5000L)
-    val j = base.join(broadcast(st), col("event_type") === col("et"))
-      .withColumn("dp",
-        col("n").cast(dec) * (col("vc") - lit(500L)) - col("sx"))
-      .withColumn("dm",
-        col("sx").cast(dec) - col("n").cast(dec) * (col("vc") + lit(500L)))
-      .withColumn("cp", sum(col("dp")).over(run))
-      .withColumn("cm", sum(col("dm")).over(run))
-      .withColumn("sp",
-        col("cp") - least(lit(0L).cast(dec), min(col("cp")).over(run)))
-      .withColumn("sm",
-        col("cm") - least(lit(0L).cast(dec), min(col("cm")).over(run)))
-    j.groupBy(col("event_type"))
-      .agg(max(col("n")).as("n"),
-        sum(when(col("sp") > hiN, 1L).otherwise(0L)).as("n_alarms_high"),
-        sum(when(col("sm") > hiN, 1L).otherwise(0L)).as("n_alarms_low"),
-        min(when(col("sp") > hiN, unix_micros(col("ts")))).as("first_high_us"),
-        min(when(col("sm") > hiN, unix_micros(col("ts")))).as("first_low_us"))
-      .orderBy("event_type")
+    val full = Window.partitionBy(col(key))
+    val kc = U.cents(lit(k))
+    val hiN = col("__n").cast(dec) * U.cents(lit(h))
+    df.withColumn("__vc", U.cents(col(value)))
+      .withColumn("__n", count(lit(1)).over(full))
+      .withColumn("__sx", sum(col("__vc")).over(full))
+      .withColumn("__dp",
+        col("__n").cast(dec) * (col("__vc") - kc) - col("__sx"))
+      .withColumn("__dm",
+        col("__sx").cast(dec) - col("__n").cast(dec) * (col("__vc") + kc))
+      .withColumn("__cp", sum(col("__dp")).over(run))
+      .withColumn("__cm", sum(col("__dm")).over(run))
+      .withColumn("cusum_high", col("__cp") -
+        least(lit(0L).cast(dec), min(col("__cp")).over(run)) > hiN)
+      .withColumn("cusum_low", col("__cm") -
+        least(lit(0L).cast(dec), min(col("__cm")).over(run)) > hiN)
+      .drop("__vc", "__n", "__sx", "__dp", "__dm", "__cp", "__cm")
   }
+
+  /** CUSUM alarm per event type through [[cusumAlarm]] (k = 5.00,
+    * h = 50.00), rolled up to alarm counts and first-alarm instants. */
+  private def tsCusumAlarm(s: SparkSession, d: String): DataFrame =
+    cusumAlarm(U.events(s, d), "event_type", "ts", "value", 5.0, 50.0,
+        Some("event_id"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("cusum_high"), 1L).otherwise(0L)).as("n_alarms_high"),
+        sum(when(col("cusum_low"), 1L).otherwise(0L)).as("n_alarms_low"),
+        min(when(col("cusum_high"), unix_micros(col("ts")))).as("first_high_us"),
+        min(when(col("cusum_low"), unix_micros(col("ts")))).as("first_low_us"))
+      .orderBy("event_type")
 
   /** Engle–Granger cointegration probe, click → purchase daily totals:
     * step 1 regresses y on x (closed OLS over exact power sums); step 2

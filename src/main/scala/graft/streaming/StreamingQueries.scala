@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{OSQL, U}
 import graft.sources.StatsSink
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
@@ -543,7 +543,7 @@ class IdleTimeoutProcessor extends StatefulProcessor[Long, IdleEvent, IdleAlert]
 object StreamingQueries {
 
   private val nameCounter = new AtomicInteger(0)
-  private val prepared = scala.collection.mutable.Set[String]()
+  private val prepared = scala.collection.mutable.Map[String, String]()
 
   /** Allocate a memory-sink table name AND evict stale sinks: a memory
     * sink pins its rows in the driver for the session's lifetime, so a
@@ -565,35 +565,43 @@ object StreamingQueries {
     name
   }
 
-  /** Split events into 8 sequentially-written ts-range files (once per JVM
-    * per sfDir); returns (dir, schema-carrying batch frame). */
-  private def stage(s: SparkSession, d: String, doubled: Boolean): String = synchronized {
-    val tag = if (doubled) "stream_events_x2" else "stream_events"
-    val dir = U.scratch(d, tag)
-    // v3: versioned so staging dirs written from a superseded fixture layout
-    // (nanos-era events, or pre-explicit-mtime ordering) rebuild rather than
-    // replay stale instants against the regenerated source table
-    val marker = Paths.get(dir, "_GRAFT_STAGED_v3")
-    if (!prepared.contains(dir) && Files.exists(marker)) prepared += dir
-    if (!prepared.contains(dir)) {
-      val ev = U.events(s, d)
-      val bounds = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).head()
+  /** Stage `src` (the fixture table `read` returns) under `dir` as 8
+    * `key`-range slices written in key order, `passes` times over, each new
+    * file stamped with a strictly increasing mtime: ordered replay needs
+    * them, and fast sequential writes can land in the same
+    * filesystem-timestamp tick, where FileStreamSource breaks ties by
+    * (random) part-file name. The staging is reused — in this JVM through
+    * `prepared`, across JVMs (Verify, Bench, tests) through the marker —
+    * only while `src` keeps the length and mtime recorded in both at
+    * staging time, so a fixture regenerated at the same path restages
+    * instead of replaying the old rows. */
+  private def stageSlices(s: SparkSession, src: String, dir: String,
+      passes: Int, read: => DataFrame, key: Column): String = synchronized {
+    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+    val files = fs.listFiles(new org.apache.hadoop.fs.Path(src), true)
+    var (len, mtime) = (0L, 0L)
+    while (files.hasNext) {
+      val f = files.next()
+      len += f.getLen
+      mtime = math.max(mtime, f.getModificationTime)
+    }
+    val stamp = s"$len $mtime"
+    val marker = Paths.get(dir, "_GRAFT_STAGED_v4")
+    if (!prepared.get(dir).contains(stamp) && Files.exists(marker) &&
+        new String(Files.readAllBytes(marker), "UTF-8") == stamp)
+      prepared(dir) = stamp
+    if (!prepared.get(dir).contains(stamp)) {
+      val df = read
+      val bounds = df.agg(min(key), max(key)).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
       val step = math.max((hi - lo) / 8, 1L)
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val passes = if (doubled) 2 else 1
-      // Event-time-ordered replay requires strictly increasing mtimes, but
-      // fast sequential writes can land in the same filesystem-timestamp
-      // tick and FileStreamSource breaks ties by (random) part-file name —
-      // so stamp each batch's new files with an explicit increasing mtime.
       var seq = 0
       val stamped = scala.collection.mutable.Set[String]()
-      for (p <- 0 until passes; i <- 0 until 8) {
+      for (_ <- 0 until passes; i <- 0 until 8) {
         val loB = lo + i * step
         val hiB = if (i == 7) hi else lo + (i + 1) * step
-        ev.filter(unix_micros(col("ts")) >= loB && unix_micros(col("ts")) < hiB)
+        df.filter(key >= loB && key < hiB)
           .coalesce(1).write.mode("append").parquet(dir)
         val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
           .filter(f => f.getPath.getName.startsWith("part-") &&
@@ -605,53 +613,25 @@ object StreamingQueries {
           seq += 1
         }
       }
-      // marker makes the staging reusable across JVMs (Verify, Bench, tests
-      // all replay the same deterministic files with their original mtimes)
-      Files.createFile(marker)
-      prepared += dir
+      Files.write(marker, stamp.getBytes("UTF-8"))
+      prepared(dir) = stamp
+      stagedSchemas -= dir
     }
     dir
   }
 
-  /** Split documents into 8 sequentially-written doc_id-range files (once
-    * per JVM per sfDir) with strictly increasing mtimes — the
-    * doc_id-ordered replay whose "first bucket occupant = min id"
-    * contract the near-dup stream rides (the events staging's mtime
-    * discipline applied to the corpus). */
-  private def stageDocs(s: SparkSession, d: String): String = synchronized {
-    val dir = U.scratch(d, "stream_docs")
-    val marker = Paths.get(dir, "_GRAFT_STAGED_v1")
-    if (!prepared.contains(dir) && Files.exists(marker)) prepared += dir
-    if (!prepared.contains(dir)) {
-      val docs = U.tbl(s, d, "documents")
-      val bounds = docs.selectExpr("CAST(min(doc_id) AS BIGINT) AS lo",
-        "CAST(max(doc_id) AS BIGINT) AS hi").head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
-      val step = math.max((hi - lo) / 8, 1L)
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      var seq = 0
-      val stamped = scala.collection.mutable.Set[String]()
-      for (i <- 0 until 8) {
-        val loB = lo + i * step
-        val hiB = if (i == 7) hi else lo + (i + 1) * step
-        docs.filter(col("doc_id") >= loB && col("doc_id") < hiB)
-          .coalesce(1).write.mode("append").parquet(dir)
-        val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .filter(f => f.getPath.getName.startsWith("part-") &&
-            !stamped.contains(f.getPath.getName))
-          .sortBy(_.getPath.getName)
-        for (f <- fresh) {
-          fs.setTimes(f.getPath, 1600000000000L + seq * 1000L, -1L)
-          stamped += f.getPath.getName
-          seq += 1
-        }
-      }
-      Files.createFile(marker)
-      prepared += dir
-    }
-    dir
-  }
+  /** Events as 8 sequential ts-range files (twice over when `doubled`). */
+  private def stage(s: SparkSession, d: String, doubled: Boolean): String =
+    stageSlices(s, s"$d/events.parquet",
+      U.scratch(d, if (doubled) "stream_events_x2" else "stream_events"),
+      if (doubled) 2 else 1, U.events(s, d), unix_micros(col("ts")))
+
+  /** Documents as 8 sequential doc_id-range files — the doc_id-ordered
+    * replay whose "first bucket occupant = min id" contract the near-dup
+    * stream rides. */
+  private def stageDocs(s: SparkSession, d: String): String =
+    stageSlices(s, s"$d/documents.parquet", U.scratch(d, "stream_docs"), 1,
+      U.tbl(s, d, "documents"), col("doc_id"))
 
   /** Shared streaming source over the staged replay — single definition so
     * every query (memory- or file-sinked) gets identical micro-batching.
@@ -664,9 +644,9 @@ object StreamingQueries {
   private def stagedSource(s: SparkSession, d: String, doubled: Boolean,
       filesPerTrigger: Int = 2): DataFrame = {
     val dir = stage(s, d, doubled)
-    // footer-derived schema cached per staged dir: the staging is immutable
-    // once its marker exists, and re-inferring it costs a driver-side footer
-    // read per SOURCE per query run (the two-source joins paid it twice)
+    // footer-derived schema cached per staged dir (dropped on restaging):
+    // re-inferring it costs a driver-side footer read per SOURCE per query
+    // run (the two-source joins paid it twice)
     val schema = synchronized {
       stagedSchemas.getOrElseUpdate(dir, s.read.parquet(dir).schema)
     }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.api.GraftApi
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The public facade (graft.api.GraftApi) driven on SYNTHETIC frames with
@@ -127,6 +128,39 @@ class ApiSpec extends SparkTestBase {
       tiebreak = Some("seq"))
       .orderBy("seq").collect().map(_.getAs[Long]("alarm"))
     assert(got.toSeq == Seq(1L, 1L, 0L, 0L))
+
+    // asOfJoin: two build rows tie at (a, t=10); ordered by seq the later
+    // one (price 2.0) is the match in both directions, whatever the input
+    // row order
+    def at(t: Column) = timestamp_micros(t * 1000000L)
+    val bRows = Seq(("a", 10L, 1.0, 1L), ("a", 10L, 2.0, 2L))
+    val probe = Seq(("a", 8L, 3L), ("a", 12L, 4L)).toDF("k", "pt", "seq")
+      .select($"k", at($"pt").as("pt"), $"seq")
+    for (rows <- Seq(bRows, bRows.reverse); fwd <- Seq(false, true)) {
+      val build = rows.toDF("k", "bt", "price", "seq")
+        .select($"k", at($"bt").as("bt"), $"price", $"seq")
+      val hit = GraftApi.asOfJoin(probe, build, Seq("k"), "pt", "bt",
+          Seq("price"), forward = fwd, tiebreak = Some("seq"))
+        .filter($"seq" === (if (fwd) 3L else 4L))
+        .collect().map(_.getAs[Double]("asof_price"))
+      assert(hit.toSeq == Seq(2.0), s"forward=$fwd rows=$rows")
+    }
+
+    // rollingOls: the rows at t=2 tie; ordered by seq the values run
+    // 1, 3, 5 and every 2-point slope is 2.0 (the other order would give
+    // 4.0 then -2.0)
+    val series = Seq(("k", 1L, 1.0, 1L), ("k", 2L, 5.0, 3L), ("k", 2L, 3.0, 2L))
+      .toDF("g", "t", "v", "seq").select($"g", at($"t").as("t"), $"v", $"seq")
+    val slopes = GraftApi.rollingOls(series, "g", "t", "v", window = 2,
+        tiebreak = Some("seq"))
+      .orderBy("seq").collect().map(_.getAs[Double]("slope"))
+    assert(slopes.toSeq == Seq(2.0, 2.0))
+
+    // sessionize: tied rows share their session whatever their order
+    val sess = GraftApi.sessionize(series, "g", "t", gapSeconds = 0,
+        tiebreak = Some("seq"))
+      .orderBy("seq").collect().map(_.getAs[Long]("session_id"))
+    assert(sess.toSeq == Seq(1L, 2L, 2L))
   }
 
   test("kalmanFilter on a constant series converges to the constant") {
@@ -205,13 +239,10 @@ class ApiSpec extends SparkTestBase {
   test("rollingOls / spearmanCorr / hammingTopK equal their declared twins") {
     // the facade kernels on fixture frames must reproduce the declared
     // queries row-for-row (same exact trees, caller-named columns)
-    val ev = U.events(spark, sfDir)
-      // unique ts per user in the fixture? not guaranteed — disambiguate
-      // exactly like the declared queries do (event_id tiebreak) by
-      // folding the id into a unique synthetic timestamp order column
-      .withColumn("ord", unix_micros(col("ts")) * 1000 +
-        pmod(col("event_id"), lit(1000L)))
-    val viaApi = GraftApi.rollingOls(ev, "user_id", "ord", "value")
+    // unique ts per user in the fixture? not guaranteed — disambiguate
+    // exactly like the declared query does (event_id tiebreak)
+    val viaApi = GraftApi.rollingOls(U.events(spark, sfDir), "user_id", "ts",
+        "value", tiebreak = Some("event_id"))
       .select(col("event_id"), col("slope"), col("intercept"))
       .orderBy("event_id").collect().map(_.toString)
     val declared = operators.TimeSeries.queries("ts_rolling_ols")(spark, sfDir)

@@ -368,4 +368,38 @@ class StreamingSpec extends SparkTestBase {
       run1.head.getLong(1) == run2.head.getLong(1),
       s"re-run must reproduce identical totals: ${run1.head} vs ${run2.head}")
   }
+
+  test("a staged replay restages when its source parquet is rewritten in place") {
+    // the staged stream files are reused only while the source parquet
+    // keeps its length and mtime: regenerating events.parquet at the same
+    // path must make the replay see the new rows, not the staged old ones
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val d = Files.createTempDirectory("graft_restage").toString
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    Files.copy(Paths.get(sfDir, "events.parquet"), Paths.get(d, "events.parquet"))
+    try {
+      def batch() = U.events(spark, d)
+        .groupBy(window(col("ts"), "1 hour", "15 minutes"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("wstart"), col("n"))
+        .orderBy("wstart").collect().toSeq
+      def streamed() = SparkEntry.queries("stream_sliding")(spark, d)
+        .select(col("wstart"), col("n")).collect().toSeq
+      val before = batch()
+      assert(streamed() == before, "first replay must match its source")
+      val subset = s"$d/subset"
+      spark.read.parquet(s"$d/events.parquet")
+        .filter(col("event_id") % 3 =!= 0)
+        .coalesce(1).write.parquet(subset)
+      val part = new java.io.File(subset).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, Paths.get(d, "events.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      val after = batch()
+      assert(after != before, "the subset must change the answer")
+      assert(streamed() == after, "replay after the rewrite must see the new rows")
+    } finally Seq(d, U.scratch(d, "stream_events")).foreach(p =>
+      fs.delete(new org.apache.hadoop.fs.Path(p), true))
+  }
 }

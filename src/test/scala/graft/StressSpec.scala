@@ -139,7 +139,7 @@ class StressSpec extends SparkTestBase {
   test("gated funnel-family anchor paths agree with the broadcast posture") {
     // r7 verdict #1: ts_funnel / ts_retention / ts_funnel_steps /
     // ts_window_funnel broadcast their |users|-row anchor frames
-    // unconditionally; they now dispatch through TimeSeries.anchorGate.
+    // unconditionally; they now dispatch through U.sizeGate.
     // Parity claim: cap=0 (every anchor shuffle-hash-joined) must be
     // row-identical to cap=MaxValue (every anchor broadcast) — it is the
     // same equi-join on user_id either way.
