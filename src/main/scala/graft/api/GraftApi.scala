@@ -38,12 +38,11 @@ object GraftApi {
   /** Gap-based sessionization: appends a `session_id` column numbering each
     * key's sessions (1-based) with a new session whenever the gap to the
     * previous row exceeds `gapSeconds`. One shuffle+sort per key; rows
-    * tying on (key, ts) share a session, and `tiebreak` fixes their row
-    * order like the declared `ts_sessionize` (event_id). Kernel:
-    * [[TimeSeries.sessionize]]. */
+    * tying on (key, ts) share a session, so their order cannot affect
+    * `session_id`. Kernel: [[TimeSeries.sessionize]]. */
   def sessionize(df: DataFrame, key: String, ts: String,
-      gapSeconds: Long, tiebreak: Option[String] = None): DataFrame =
-    TimeSeries.sessionize(df, key, ts, gapSeconds, tiebreak)
+      gapSeconds: Long): DataFrame =
+    TimeSeries.sessionize(df, key, ts, gapSeconds)
 
   /** Grouped top-k through the custom whole-operator plan (bounded per-group
     * heaps — no global sort, no full window materialization). */
@@ -138,9 +137,9 @@ object GraftApi {
     * Returns every key with each step's completion time t1..tN and
     * funnel_level (0..steps.length). The |keys|-row anchor frames
     * dispatch through [[graft.U.sizeGate]] (broadcast below
-    * `broadcastCap` rows, shuffle-hash above; release the cached anchor
-    * frames with `graft.U.releaseTracked()`). Kernel:
-    * [[TimeSeries.windowFunnel]]. */
+    * `broadcastCap` rows, shuffle-hash above). Every step's anchor frame
+    * (`steps.length` of them) stays cached until the caller runs
+    * `graft.U.releaseTracked()`. Kernel: [[TimeSeries.windowFunnel]]. */
   def windowFunnel(df: DataFrame, key: String, ts: String, typeCol: String,
       steps: Seq[String], windowSeconds: Long,
       broadcastCap: Long = graft.U.BroadcastRowCap): DataFrame =

@@ -47,13 +47,13 @@ object TimeSeries {
   /** Gap-based sessionization kernel: appends a `session_id` column
     * numbering each key's sessions (1-based), a new session whenever the
     * gap to the previous row exceeds `gapSeconds` — the running sum of
-    * gap flags. One shuffle+sort per key. Rows tying on (key, ts) share a
-    * session whatever their order; `tiebreak` extends the (key, ts) window
-    * order to make the row order itself deterministic. */
-  def sessionize(df: DataFrame, key: String, ts: String, gapSeconds: Long,
-      tiebreak: Option[String] = None): DataFrame = {
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(ts) +: tiebreak.map(col).toSeq: _*)
+    * gap flags. One shuffle+sort per key. Tie order cannot affect
+    * `session_id` (for any `gapSeconds` >= 0): rows tying on (key, ts) are
+    * 0 s apart, so none of them opens a session, and the row after them
+    * lags to the same ts whichever of them comes last. */
+  def sessionize(df: DataFrame, key: String, ts: String,
+      gapSeconds: Long): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col(ts))
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__prev_us", lag(unix_micros(col(ts)), 1).over(w))
       .withColumn("session_id", sum(
@@ -66,7 +66,7 @@ object TimeSeries {
   /** 30-minute-gap sessionization through [[sessionize]], then one
     * aggregate per (user, session). */
   private def tsSessionize(s: SparkSession, d: String): DataFrame =
-    sessionize(U.events(s, d), "user_id", "ts", 1800L, Some("event_id"))
+    sessionize(U.events(s, d), "user_id", "ts", 1800L)
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"), U.dsum(col("value")).as("sum_value"))
@@ -1352,10 +1352,9 @@ object TimeSeries {
     * one filtered hash-agg joined to the anchor frame of the previous
     * step; a key that misses step i is absent from that step's frame
     * and can never match step i+1, so `funnel_level` counts a true
-    * prefix. Returns every key
-    * with each step's completion time t1..tN and funnel_level
-    * (0..steps.length) — never a per-key event-sequence collect, so the
-    * shape survives any event volume. The anchor frames are
+    * prefix. Returns every key with each step's completion time t1..tN
+    * and funnel_level (0..steps.length) — never a per-key event-sequence
+    * collect, so the shape survives any event volume. The anchor frames are
     * |keys|-cardinality, so they dispatch through [[U.sizeGate]]:
     * broadcast below `broadcastCap` rows, shuffle-hash equi-join above
     * it. The verdict is measured once on the first stage's anchors (one

@@ -543,7 +543,6 @@ class IdleTimeoutProcessor extends StatefulProcessor[Long, IdleEvent, IdleAlert]
 object StreamingQueries {
 
   private val nameCounter = new AtomicInteger(0)
-  private val prepared = scala.collection.mutable.Map[String, String]()
 
   /** Allocate a memory-sink table name AND evict stale sinks: a memory
     * sink pins its rows in the driver for the session's lifetime, so a
@@ -570,13 +569,13 @@ object StreamingQueries {
     * file stamped with a strictly increasing mtime: ordered replay needs
     * them, and fast sequential writes can land in the same
     * filesystem-timestamp tick, where FileStreamSource breaks ties by
-    * (random) part-file name. The staging is reused — in this JVM through
-    * `prepared`, across JVMs (Verify, Bench, tests) through the marker —
-    * only while `src` keeps the length and mtime recorded in both at
-    * staging time, so a fixture regenerated at the same path restages
-    * instead of replaying the old rows. */
-  private def stageSlices(s: SparkSession, src: String, dir: String,
-      passes: Int, read: => DataFrame, key: Column): String = synchronized {
+    * (random) part-file name. The staging is reused, by any JVM (Verify,
+    * Bench, tests), only while `src` keeps the length and mtime its marker
+    * recorded at staging time, so a fixture regenerated at the same path
+    * restages instead of replaying the old rows. Returns the staged dir
+    * and that (length, mtime) stamp. */
+  private def stageSlices(s: SparkSession, src: String, dir: String, passes: Int,
+      read: => DataFrame, key: Column): (String, String) = synchronized {
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     val files = fs.listFiles(new org.apache.hadoop.fs.Path(src), true)
     var (len, mtime) = (0L, 0L)
@@ -587,10 +586,8 @@ object StreamingQueries {
     }
     val stamp = s"$len $mtime"
     val marker = Paths.get(dir, "_GRAFT_STAGED_v4")
-    if (!prepared.get(dir).contains(stamp) && Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == stamp)
-      prepared(dir) = stamp
-    if (!prepared.get(dir).contains(stamp)) {
+    if (!(Files.exists(marker) &&
+        new String(Files.readAllBytes(marker), "UTF-8") == stamp)) {
       val df = read
       val bounds = df.agg(min(key), max(key)).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
@@ -614,14 +611,13 @@ object StreamingQueries {
         }
       }
       Files.write(marker, stamp.getBytes("UTF-8"))
-      prepared(dir) = stamp
-      stagedSchemas -= dir
     }
-    dir
+    (dir, stamp)
   }
 
   /** Events as 8 sequential ts-range files (twice over when `doubled`). */
-  private def stage(s: SparkSession, d: String, doubled: Boolean): String =
+  private def stage(s: SparkSession, d: String,
+      doubled: Boolean): (String, String) =
     stageSlices(s, s"$d/events.parquet",
       U.scratch(d, if (doubled) "stream_events_x2" else "stream_events"),
       if (doubled) 2 else 1, U.events(s, d), unix_micros(col("ts")))
@@ -631,7 +627,7 @@ object StreamingQueries {
     * stream rides. */
   private def stageDocs(s: SparkSession, d: String): String =
     stageSlices(s, s"$d/documents.parquet", U.scratch(d, "stream_docs"), 1,
-      U.tbl(s, d, "documents"), col("doc_id"))
+      U.tbl(s, d, "documents"), col("doc_id"))._1
 
   /** Shared streaming source over the staged replay — single definition so
     * every query (memory- or file-sinked) gets identical micro-batching.
@@ -639,16 +635,21 @@ object StreamingQueries {
     * (4 batches — enough watermark advances to exercise finalization);
     * batch-boundary-INDEPENDENT queries may replay at 4 (fewer state-store
     * commit rounds, same result by construction). */
-  private val stagedSchemas =
-    scala.collection.mutable.Map[String, org.apache.spark.sql.types.StructType]()
+  private val stagedSchemas = scala.collection.mutable.Map[String,
+    (String, org.apache.spark.sql.types.StructType)]()
   private def stagedSource(s: SparkSession, d: String, doubled: Boolean,
       filesPerTrigger: Int = 2): DataFrame = {
-    val dir = stage(s, d, doubled)
-    // footer-derived schema cached per staged dir (dropped on restaging):
-    // re-inferring it costs a driver-side footer read per SOURCE per query
-    // run (the two-source joins paid it twice)
+    val (dir, stamp) = stage(s, d, doubled)
+    // footer-derived schema cached per (staged dir, source stamp), so a
+    // restage by any JVM invalidates it: re-inferring it costs a
+    // driver-side footer read per SOURCE per query run (the two-source
+    // joins paid it twice)
     val schema = synchronized {
-      stagedSchemas.getOrElseUpdate(dir, s.read.parquet(dir).schema)
+      stagedSchemas.get(dir).collect { case (`stamp`, sc) => sc }.getOrElse {
+        val sc = s.read.parquet(dir).schema
+        stagedSchemas(dir) = (stamp, sc)
+        sc
+      }
     }
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(dir)

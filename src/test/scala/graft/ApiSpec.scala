@@ -156,9 +156,9 @@ class ApiSpec extends SparkTestBase {
       .orderBy("seq").collect().map(_.getAs[Double]("slope"))
     assert(slopes.toSeq == Seq(2.0, 2.0))
 
-    // sessionize: tied rows share their session whatever their order
-    val sess = GraftApi.sessionize(series, "g", "t", gapSeconds = 0,
-        tiebreak = Some("seq"))
+    // sessionize needs no tiebreak: tied rows share their session
+    // whatever their order
+    val sess = GraftApi.sessionize(series, "g", "t", gapSeconds = 0)
       .orderBy("seq").collect().map(_.getAs[Long]("session_id"))
     assert(sess.toSeq == Seq(1L, 2L, 2L))
   }
